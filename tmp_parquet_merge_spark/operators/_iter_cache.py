@@ -1,14 +1,14 @@
 """Loop-invariant build-side caching for iterative join-aggregate
 loops (pagerank, dedup_clusters' min-label propagation).
 
-The round-7 lesson, stated once: in an iterative loop, lineage
+The lesson, stated once: in an iterative loop, lineage
 truncation must not erase co-partitioning — ``localCheckpoint`` the
 *state* (whose lineage grows per round) but ``persist`` the
 *loop-invariant* build side pre-partitioned + sorted on its join key,
 so every round's sort-merge join reads it from the InMemoryTableScan
 with zero Exchange and zero Sort above it.  ``localCheckpoint``
 surfaces UnknownPartitioning, which silently re-shuffles AND re-sorts
-the full build side every round (the r6 25× stress measured PageRank
+the full build side every round (a 25× scale stress measured PageRank
 at 3.5× slower from exactly this).
 
 Plan shape pinned in

@@ -632,7 +632,7 @@ def span_mask_plan(
     span order so the driver hash never sees an array cell.  One scan,
     no shuffle.
 
-    Parameter validation (r13 advisor): with mask_ratio_pct ≤ 100 the
+    Parameter validation: with mask_ratio_pct ≤ 100 the
     block B = n_tok div n_spans satisfies B ≥ floor(100·span_len /
     mask_ratio_pct) ≥ span_len whenever n_spans > 0, so the jitter
     modulus B − span_len + 1 is always ≥ 1; ratios > 100 (or

@@ -32,7 +32,7 @@ def spread_scan(
     df: DataFrame, *keys: str, target: int | None = None
 ) -> DataFrame:
     """Conditionally repartition a scan whose split count is below the
-    cluster's default parallelism (r14 optimization round, guide §2.5
+    cluster's default parallelism (guide §2.5
     "input skew — one huge unsplittable file: repartition immediately
     after the read").
 
@@ -52,7 +52,7 @@ def spread_scan(
     instead of adding its own).  Without keys, round-robin.
 
     Only layout changes; caller results must be layout-invariant
-    (integer/min/max/count aggregates, set semantics) — every r14 call
+    (integer/min/max/count aggregates, set semantics) — every call
     site is, and oracle parity at all bundled tiers plus the
     local[5]-vs-local[32] probe pin it.
 
@@ -62,7 +62,7 @@ def spread_scan(
     the last-ulp of every sum — is identical at any core count;
     layout-invariant consumers leave it None (cores-derived floor).
 
-    Probe cost (r15, r14 verdict "what's wrong" #5 + advisor): the
+    Probe cost: the
     precise split count needs a driver-side plan→RDD conversion
     (``df.rdd``) — one extra physical-planning pass per query build.
     Two cheap short-circuits bound it: (a) a DataFrame this helper has
@@ -256,7 +256,7 @@ def _substring_qual_runs(
     queries keep the string spelling so the DuckDB oracle stays
     exact.
 
-    Returns ``(grams, spans)``: the lazily-checkpointed gram relation
+    Returns ``(grams, spans)``: the checkpointed (eager=False) gram relation
     ``(_id, i, gram)`` — from which callers derive per-doc word counts
     as ``max(i) + k`` without re-scanning or pinning the corpus — and
     the qualifying-run rows ``(_id, i, isl, span)``."""
@@ -352,7 +352,7 @@ def substring_dup_spans(
     document length; nothing is quadratic in corpus size.
     """
     # parallelism floor for deficient scans (no-op at scale): gram
-    # slicing + the lazily-checkpointed gram relation materialize
+    # slicing + the checkpointed gram relation materialize
     # cluster-parallel instead of inside a single scan task
     d = spread_scan(df, id_col).select(
         F.col(id_col).alias("_id"), words(text_col).alias("ws")
@@ -513,7 +513,7 @@ def editdist_pairs(
     diverge.  The blocking join shuffles normalized bodies, so the
     registered query caps its input like the other exact verify twins.
 
-    ``candidates`` is the open-scale path (r5 verdict #4): a
+    ``candidates`` is the open-scale path: a
     (doc_a, doc_b) candidate-pair DataFrame — typically
     ``minhash_dedup_pairs(..., verify_threshold=None)`` — replaces the
     prefix-blocking self-join entirely.  Normalized bodies then move
@@ -602,7 +602,8 @@ def _sized_shingles(
     df: DataFrame, text_col: str, id_col: str, *, n: int
 ) -> DataFrame:
     """(doc, s, n_sh) — distinct shingles with the per-doc shingle
-    count attached, materialized ONCE via lazy localCheckpoint.
+    count attached, materialized ONCE via ``localCheckpoint(eager=False)``
+    (under AQE the call itself runs the upstream shuffle stage).
 
     The pair builders below consume this relation three ways (join
     left, join right, and both size lookups); without the checkpoint,
@@ -761,9 +762,11 @@ def minhash_dedup_pairs(
     rows = num_perm // bands
     # the shingle pipeline (explode → window → distinct) feeds BOTH the
     # signature stage and the verify stage; Catalyst does not fuse the
-    # two subplans, so materialize it once (lazy local checkpoint:
-    # computed on first use, executor-cached for the second — bounded
-    # by corpus token count, the same data both branches must read)
+    # two subplans, so materialize it once (local checkpoint, bounded
+    # by corpus token count, the same data both branches must read).
+    # eager=False does not defer the work under AQE: the call itself
+    # runs the upstream shuffle stage, the first action writes the
+    # blocks, and the second consumer reads them from executor cache
     sh = shingle_rows(df, text_col, id_col, n=shingle_n)
     if verify_threshold is not None:
         sh = sh.localCheckpoint(eager=False)
@@ -802,13 +805,13 @@ def minhash_dedup_pairs(
     )
     sa = sets_.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = sets_.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
-    # two costs engineered out of the verify (r12): the union array is
+    # two costs engineered out of the verify: the union array is
     # never materialized (|A∪B| = |A|+|B|−|A∩B| from per-set sizes),
     # and the O(|set|) array_intersect runs ONCE per candidate — with
     # jaccard as a live expression, filter pushdown re-inlines it into
     # both the threshold filter and the output projection (the
     # editdist double-levenshtein class), so the sized counts
-    # materialize behind a lazy checkpoint and the filter reads
+    # materialize behind a checkpoint and the filter reads
     # columns
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     scored = (
@@ -861,11 +864,11 @@ def dedup_clusters(
     cluster prefer ``checkpoint`` to a reliable dir for fault
     tolerance).  Convergence is detected from the monotonically
     decreasing sum of labels — one lightweight agg per round instead of
-    a change-count join against the previous labels — and (r15) the
-    checkpoint is LAZY with the convergence agg as its materializing
-    action, so a check round costs ONE job (materialize + probe fused)
-    instead of the old eager-checkpoint job plus a separate scalar
-    read.  ``check_every``
+    a change-count join against the previous labels — taken right
+    after a ``localCheckpoint(eager=False)``.  Under AQE that call is
+    not lazy: it runs the round's upstream shuffle stage itself (one
+    job), and the convergence agg then materializes the checkpoint
+    blocks as it scans.  ``check_every``
     batches N propagation rounds into one eager checkpoint job and one
     convergence read (the PageRank loop's cadence knob): labels are
     monotone, so skipped checks can only cost up to N-1 no-op rounds
@@ -878,7 +881,7 @@ def dedup_clusters(
 
     e = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     # the loop-invariant symmetrized edge list is cached pre-
-    # partitioned + sorted on the join key (round 7, same fix as
+    # partitioned + sorted on the join key (same fix as
     # pagerank — see operators/_iter_cache.py): rounds then only
     # exchange the (small) label state, never the edges.
     sym = e.union(
@@ -916,14 +919,14 @@ def dedup_clusters(
             )
             if it % check_every != 0 and it != max_iter:
                 continue
-            # LAZY checkpoint + immediate scalar probe = ONE job per
-            # round (r15, r14 verdict "Next round" #7): the probe's
-            # action materializes the checkpoint blocks as it scans,
-            # so the old separate eager-checkpoint job disappears.
-            # Labels are bit-identical — same plan, same blocks, only
-            # the materializing action changed.  (The non-numeric
-            # first round runs no probe; its lazy checkpoint then
-            # materializes inside the next round's first job, still
+            # Non-eager checkpoint + immediate scalar probe.  Under AQE
+            # the call still runs the round's upstream shuffle stage
+            # (one job); the probe's action then writes the checkpoint
+            # blocks as it scans, so no separate eager-checkpoint job
+            # runs.  Labels are bit-identical — same plan, same blocks,
+            # only the materializing action differs.  (The non-numeric
+            # first round runs no probe; its checkpoint blocks then
+            # materialize inside the next round's first job, still
             # exactly once.)
             lab = lab.localCheckpoint(eager=False)
             if numeric_ids:
@@ -949,9 +952,10 @@ def dedup_clusters(
                     "node", F.col("label").alias("prev_label")
                 )
     # numeric-id loop exits always ran the scalar probe on the final
-    # round's lazy checkpoint, so lab is materialized and no longer
+    # round's checkpoint, so lab is materialized and no longer
     # needs the edge cache the with-block released; the non-numeric
-    # first-check corner (prev_lab None at max_iter) leaves lab lazy —
+    # first-check corner (prev_lab None at max_iter) leaves lab's
+    # checkpoint blocks unwritten —
     # it then recomputes through the (unpersisted but still valid)
     # edge lineage, identical labels either way
     if not converged:
@@ -981,8 +985,8 @@ def simhash(df: DataFrame, text_col: str, id_col: str, *, bits: int = 64) -> Dat
     pieces (``conv(substring(md5(w), 1+4i, 4), 16, 10)``) — NOT
     xxhash64: md5 is the one 64-bit-capable hash DuckDB can spell
     identically (``('0x' || substring(md5(w), …))::BIGINT``), which is
-    what lets q_dedup_simhash carry an exact cross-engine oracle (r12
-    graduation; bit b of the hash ≙ bit b%16 of piece b//16, pieces
+    what lets q_dedup_simhash carry an exact cross-engine oracle (bit
+    b of the hash ≙ bit b%16 of piece b//16, pieces
     most-significant-first)."""
     # parallelism floor for deficient scans (no-op at scale), keyed by
     # the doc id: tokenize + 4 md5-piece convs + the 64 partial vote
@@ -1043,12 +1047,12 @@ def simhash_dedup_pairs(
     bit_count verify.  Generalized pigeonhole: a total distance ≤
     max_hamming leaves ≤ ⌊max_hamming/bands⌋ errors in some band, so
     the band-ball join is an exact candidate generator for ANY band
-    count dividing 64 — the r11 f=0 spelling was only exact to
+    count dividing 64 — the earlier f=0 spelling was only exact to
     Hamming 3 and silently lossy above it ("mostly caught"), which
     kept the query rows-only; exactness is what lets it carry a
     DuckDB oracle.
 
-    Band-geometry cost law (r12 verdict #3, A/B'd at the 25× replica
+    Band-geometry cost law (A/B'd at the 25× replica
     — numbers in SCALE.md): probe rows per doc are bands·|ball| (548
     at 4×16/H2, 72 at 8×8/H1) but candidate pairs per doc scale as
     Σ probes·n/2^width — the 8-bit key space is 256, so 8×8/H1
@@ -1068,7 +1072,7 @@ def simhash_dedup_pairs(
     # bands=1 (width 64) is rejected even though it divides 64: its
     # key mask 2^64-1 and any ball mask with bit 63 set exceed Spark's
     # signed LongType literal range, so the plan build would fail with
-    # an opaque overflow instead of this diagnostic (r13 advisor).
+    # an opaque overflow instead of this diagnostic.
     if bands < 2 or 64 % bands != 0:
         raise ValueError(
             f"bands must be a divisor of 64 in [2, 64] (band width "
@@ -1519,7 +1523,7 @@ def containment_pairs_rare_shingle(
     Candidate recall: the cut relaxes to
     ``least(min_shared, rare_na, rare_nb)`` where rare_n is the doc's
     RARE (2 ≤ df ≤ max_df) shingle count — NOT its total shingle
-    count (the r13 advisor hole: a short doc whose shingles include
+    count (otherwise a short doc whose shingles include
     even one boilerplate df > max_df shingle would keep a floor it
     can never meet, because boilerplate shingles are absent from the
     index).  A doc that shares ALL of its rare shingles is therefore
@@ -1556,7 +1560,7 @@ def containment_pairs_rare_shingle(
     # be the rare count, not the doc's total shingle count: shingles
     # with df > max_df never enter the index, so a total-count floor
     # would structurally exclude a short doc carrying even one
-    # boilerplate shingle despite full containment (r13 advisor).
+    # boilerplate shingle despite full containment.
     rare = rare0.select(
         "doc",
         "s",

@@ -65,8 +65,8 @@ def cooccurrence_pairs(
     table twice and builds a join hash table per task.  Each group's
     item set is buffered as ONE array row, so group sizes must be
     bounded; ``max_group_size`` ENFORCES that contract instead of
-    leaving it to the docstring (r5 verdict: a pathological 10M-item
-    group would otherwise OOM a task silently):
+    leaving it to the docstring (a pathological 10M-item group would
+    otherwise OOM a task silently):
 
     * ``on_oversize="error"`` (default): any group over the cap fails
       the job with a descriptive error naming the group — the guard is
@@ -83,7 +83,7 @@ def cooccurrence_pairs(
     * ``max_group_size=None`` disables the guard (caller has already
       capped/salted upstream).
 
-    The ``error`` default is DELIBERATE (r6 advisor adjudication): an
+    The ``error`` default is DELIBERATE: an
     oversized group is almost always a data bug (a null/sentinel group
     key collecting millions of items), and silently degrading it to
     the self-join path would stream out k²/2 ≈ 10¹⁰ pairs for a 100k+
@@ -99,8 +99,8 @@ def cooccurrence_pairs(
         raise ValueError(f"on_oversize must be error|selfjoin: {on_oversize}")
     from tmp_parquet_merge_spark.operators.dedup import spread_scan
 
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan), keyed by the group
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan), keyed by the group
     # so the collect_set aggregate's clustering reuses the exchange;
     # sort_array(collect_set) is layout-invariant
     df = spread_scan(df, group_col)
@@ -189,14 +189,14 @@ def pagerank(
 
     The edge list is hash-partitioned on ``src``, sorted within
     partitions, and PERSISTED (MEMORY_AND_DISK) rather than
-    localCheckpointed (round 7): a checkpointed RDD surfaces as
+    localCheckpointed: a checkpointed RDD surfaces as
     ``UnknownPartitioning``, so every round's sort-merge join was
     re-shuffling AND re-sorting the full edge list — the dominant
     cost at scale (10 rounds × a 60M-edge exchange in the 25× stress).
     ``InMemoryTableScan`` preserves the cached plan's partitioning
     and ordering, so each round's join does ZERO work on the edges
     side: only the (small) state exchanges per round.  25× re-measure:
-    the 10-round loop fell from ~110 s to ~31 s (SCALE.md round 7).
+    the 10-round loop fell from ~110 s to ~31 s (SCALE.md).
     The cache is released (unpersist) before returning — the final
     state is eagerly checkpointed, so the result does not depend on
     it.
@@ -220,15 +220,15 @@ def pagerank(
     rounded up to a multiple of it.  Ranks are bit-identical for any
     value — it is a physical knob like ``num_partitions``.
 
-    ``symmetric=True`` (r14 optimization round, guide §2.4 "remove
-    shuffles outright"): the caller asserts every edge is present in
+    ``symmetric=True`` (guide §2.4 "remove shuffles outright"): the
+    caller asserts every edge is present in
     both directions (q_pagerank's :func:`symmetrize` output).  Then
     the node set IS the out-degree key set — the nodes union+distinct
     pass over the edge cache, the left-join that attaches degrees to
     possibly-degree-less nodes, and the dangling probe job all
     disappear (a symmetric graph cannot have a node without
     out-edges).  Results are identical by construction; the generic
-    default keeps the full dangling-aware path.  WARNING (r14 advisor):
+    default keeps the full dangling-aware path.  WARNING:
     this is an UNCHECKED caller assertion — on a graph that is NOT
     symmetric, nodes with only in-edges are silently DROPPED from the
     output (they never appear in the out-degree key set), ``n_nodes``
@@ -236,10 +236,10 @@ def pagerank(
     lists produced by :func:`symmetrize` (or provably closed under
     reversal); anything else must use the default path.
 
-    ``broadcast_state_max_nodes`` (r14 optimization round, guide §3.1
-    / §2.4): when the driver-known node count is at or under this gate,
-    each round's two state joins run as broadcast-hash joins — the
-    rank state (~32 B/node) broadcasts into the contributions join, so
+    ``broadcast_state_max_nodes`` (guide §3.1 / §2.4): when the
+    driver-known node count is at or under this gate, each round's
+    two state joins run as broadcast-hash joins — the rank state
+    (~32 B/node) broadcasts into the contributions join, so
     the persisted edge cache streams through with NO exchange and NO
     sort on either side, and the contributions aggregate broadcasts
     back into the state update.  A round then pays exactly ONE small
@@ -259,7 +259,7 @@ def pagerank(
     broadcast would re-execute prior rounds inside the broadcast
     build), so ``checkpoint_every`` applies only above the gate.
 
-    Broadcast hygiene (r15, r14 verdict "what's wrong" #4): each
+    Broadcast hygiene: each
     broadcast-path round builds two fresh ≤~3 MB broadcast relations
     (the gate bounds state bytes) that are only reclaimed when the JVM
     collects the superseded round's plan and the ContextCleaner

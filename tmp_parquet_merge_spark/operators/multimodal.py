@@ -80,8 +80,8 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def decode_image(payload: bytes) -> object:
     """Real decoder entry point: decodes ``payload`` with PIL when the
-    library is importable (r5 verdict #6 — the family upgrades itself
-    when the environment gains codecs, no code change), else raises
+    library is importable (the family upgrades itself when the
+    environment gains codecs, no code change), else raises
     NotImplementedError and extract_features uses the deterministic
     byte-level fake."""
     try:
@@ -308,7 +308,7 @@ def media_neardup_pairs(
     "Fast Search in Hamming Space with Multi-Index Hashing", CVPR
     2012): each item indexes ONE key per band, and probes the Hamming
     ball of radius f = ⌊radius/bands⌋ around its own band value.  The
-    r11 spelling was the f=0 degenerate case (bands=11 1-key bands of
+    earlier spelling was the f=0 degenerate case (bands=11 1-key bands of
     5.8 bits), whose background candidate density measured 36% of ALL
     pairs on the bundled corpus — banding barely filtered, and the
     25× sweep's 17.99 ratio was that quadratic candidate relation.
@@ -318,7 +318,7 @@ def media_neardup_pairs(
     probe-side explode per item.
 
     The probe explode must NOT be shuffled: 548 rows/item through an
-    exchange costs more than the candidate savings (the r12 A/B:
+    exchange costs more than the candidate savings (measured A/B:
     shuffled MIH 40 s vs the f=0 spelling's 28 s at the 25× replica;
     broadcast-index MIH 4.5 s).  When the index relation (n·bands
     3-int rows) fits a broadcast, ship IT and stream the probe side
@@ -335,7 +335,7 @@ def media_neardup_pairs(
 
     Candidates are NOT deduped before the verify: a pair within f in
     k bands is verified k times (k ≤ bands) and deduped AFTER the
-    Hamming filter, when only surviving pairs remain (the r11 A/B:
+    Hamming filter, when only surviving pairs remain (measured A/B:
     pre-verify distinct cost 3.4 s of 7.9 s at sf0.1)."""
     import math
 
@@ -359,7 +359,7 @@ def media_neardup_pairs(
     sigs = blockhash_signatures(
         media, id_col=id_col, payload_col=payload_col, bands=bands
     ).localCheckpoint(eager=False)
-    # the checkpoint materializes here anyway on first use; counting
+    # the count below writes the checkpoint blocks; counting
     # it decides the join regime (broadcast index vs shuffle) without
     # a second payload scan
     n_items = sigs.count()

@@ -56,8 +56,8 @@ def asof_join(
     those left rows come back with NULL right values; a RIGHT row with
     a NULL time likewise matches nothing (its struct is never built —
     without that guard the backward sort's NULLS-FIRST placement would
-    carry it into every left row with no real at-or-before match,
-    r14 review).  Ties among right rows sharing (key, time) resolve
+    carry it into every left row with no real at-or-before
+    match).  Ties among right rows sharing (key, time) resolve
     deterministically to the greatest ``right_values`` tuple (the
     struct is the final window sort key); without a total order the
     carried row would depend on shuffle order and flake cross-run
@@ -242,7 +242,7 @@ def funnel(
     i from branches i..k−1, and Spark does NOT dedupe common subplans
     across union branches — without the checkpoint the plan re-scans
     the event table and re-runs ~k(k+1)/2 stage aggregations instead
-    of k (r14 review).
+    of k.
     """
     if not stages:
         raise ValueError("funnel needs at least one stage")
@@ -304,7 +304,7 @@ def upsert(
     # a target column absent from the updates schema has no defined
     # MERGE semantics here: silently NULLing it on matched rows (the
     # old behavior) is data destruction on every partial-schema CDC
-    # apply (r14 review) — demand an explicit projection instead
+    # apply — demand an explicit projection instead
     missing = [
         c for c in target.columns
         if c not in keys and c not in updates.columns
@@ -365,7 +365,7 @@ def upsert(
             if on_duplicate == "error" and not non_key:
                 # keys-only target: no non-key column exists to host
                 # the duplicate guard, so it would never be evaluated
-                # (r14 review) — fuse it into the key columns instead.
+                # — fuse it into the key columns instead.
                 # `matched` embeds the raise_error branch; the
                 # tautological when() is value-neutral (kcol either
                 # way) and Catalyst does not fold it (test-pinned).
@@ -460,10 +460,10 @@ def rate_spikes(
 
     The baseline-mean column is named from the parameter
     (``mean_{trail}h``) so a caller passing trail=48 is not handed a
-    column whose name misstates its window (r13 advisor); the
+    column whose name misstates its window; the
     registered trail=24 output is byte-identical to before.
 
-    Constant-baseline alarms (r14 review): when the trailing window is
+    Constant-baseline alarms: when the trailing window is
     perfectly constant, sd_prev = 0 and z is undefined (NULL) — but
     that is exactly the regime where ANY deviation is the most
     obvious (a cron heartbeat emitting 5 events/hour that dies).  The
@@ -473,7 +473,7 @@ def rate_spikes(
     stays NULL there, honestly undefined.  Rows with a NULL
     ``type_col`` are EXCLUDED up front: a NULL key never equi-joins
     back to its own spine, so their hours would all read n_events = 0
-    — silently corrupt (r14 review)."""
+    — silently corrupt."""
     h = (
         df.filter(F.col(type_col).isNotNull())
         .groupBy(

@@ -216,7 +216,7 @@ def _auto_lsh_params(
 
     Fixed banding does not scale: with b bits per band a RANDOM pair
     collides with prob 2^-b per band, so candidate count grows as
-    L·n²·2^-b — quadratic once n outgrows 2^b (the r6 scale sweep
+    L·n²·2^-b — quadratic once n outgrows 2^b (a scale sweep
     measured exactly that: 16-bit/4-band SRP went 25× slower on 5×
     the vectors).  Growing b with log2(n) pins expected random
     collisions to O(n) (E[bucket] ≈ 2^min_bits per band); bands then
@@ -224,7 +224,7 @@ def _auto_lsh_params(
     design point (p_band = (1-acos(s)/π)^b,
     L = ln(1-R)/ln(1-p_band)).
 
-    Bands are UNCAPPED by default (r6 advisor): each log2(n) bit
+    Bands are UNCAPPED by default: each log2(n) bit
     multiplies the bands needed by 1/p1 (p1 = 1-acos(s)/π ≈ 0.856 at
     s=0.9), so L grows only ~n^0.22 — ≈37 bands at n=4M, ≈130 at
     n=1e9 — a linear per-vector signature cost, vs. silently losing
@@ -403,8 +403,8 @@ def embedding_dedup_pairs_lsh(
     selectivity tracks log2(n) so expected random-pair collisions —
     and therefore verify cost — stay O(n·bands) as the corpus grows,
     while the band count is sized to hold ``target_recall`` AT THE
-    OPERATING ``threshold`` (r10 — the r8 sizing targeted recall at
-    cosine 0.9 regardless of the query's threshold, which measured
+    OPERATING ``threshold`` (sizing for recall at cosine 0.9
+    regardless of the query's threshold measured
     pair_recall 0.38/0.44 at the 0.4 boundary: only 4 bands, each
     nearly blind to a 66° angle).  Sizing at the operating point
     measures 0.97/0.97/0.95 on the bundled tiers (the per-band
@@ -418,13 +418,13 @@ def embedding_dedup_pairs_lsh(
     Pass ``nbits``/``bands`` explicitly to pin a fixed layout
     instead.
 
-    ``probe_flips=1`` (r11) turns on Hamming-1 multi-probe over-fetch
+    ``probe_flips=1`` turns on Hamming-1 multi-probe over-fetch
     (Lv et al. 2007): the probe side also emits every band key with
     one bit flipped, multiplying per-band pair recall by
     ~(1 + b·(1-p)/p) for free band-count-wise.  With
     ``target_recall`` pushed to 1-1e-5 this makes the emitted pair
     set equal to the exact twin's on the bundled corpora (the q_ann_lsh
-    r8 graduation protocol applied to the pair problem — candidates
+    graduation protocol applied to the pair problem — candidates
     over-fetched, then the SAME exact cosine filter, so output ⊆ exact
     always and = exact when candidate coverage is total).  The honest
     open-scale law stands: per-pair miss probability is fixed by
@@ -443,7 +443,7 @@ def embedding_dedup_pairs_lsh(
         )
         nbits = rows_per_band * n_bands
         bands = n_bands
-        # Regime switch (r11, from the 25x sweep's 53x blow-up): when
+        # Regime switch (from the 25x sweep's 53x blow-up): when
         # the sizing that HOLDS target_recall at the operating
         # threshold is so permissive that a RANDOM pair is a candidate
         # with probability >= bg_frac_cutoff, the banded index
@@ -464,7 +464,7 @@ def embedding_dedup_pairs_lsh(
             >= bg_frac_cutoff
         )
     # the normalized frame feeds the signature stage AND the verify
-    # join-back; materialize once (lazy local checkpoint) so the Arrow
+    # join-back; materialize once (non-eager local checkpoint) so the Arrow
     # normalization doesn't run per consumer
     normed = df.select(
         F.col(id_col), unit_udf()(F.col(vec_col)).alias(vec_col)
@@ -702,7 +702,7 @@ def ann_topk(
     (:func:`lsh_bucket_candidates`) remain the right tool for the
     high-similarity pair-mining regime (embedding near-dedup), but for
     top-k at moderate cosine they cannot separate signal from noise
-    without near-all-pairs candidate sets — measured r7: 4×4-bit bands
+    without near-all-pairs candidate sets — measured: 4×4-bit bands
     missed 25/50 true pairs here; this re-rank design replaced them.
     """
     qpdf = _pull_queries(queries, id_col, vec_col, query_cap)
@@ -751,7 +751,7 @@ def ann_topk(
     ).select("q_vec", "n_vec")
     # Plain Python ints/floats, NOT numpy scalars: Spark's non-Arrow
     # createDataFrame fallback rejects numpy.float64 inside array<double>
-    # (PySparkTypeError FIELD_DATA_TYPE_UNACCEPTABLE — crashed the r8
+    # (PySparkTypeError FIELD_DATA_TYPE_UNACCEPTABLE — crashed the
     # correctness driver), and whether Arrow engages is config-dependent.
     qe = corpus.sparkSession.createDataFrame(
         pd.DataFrame({"q_vec": q_ids.tolist(), "q_emb": Qn.tolist()}),
@@ -883,11 +883,13 @@ def _lloyd(
     # update's shuffle carries k×dim partial sums regardless of
     # layout.  Blocks free when the fit's references drop (the
     # repo-wide localCheckpoint loop discipline).
-    # r15: the checkpoint is LAZY and the deterministic-init toPandas
-    # below is its materializing action — init + materialization fuse
-    # into ONE job instead of an eager-checkpoint job followed by a
-    # separate init read (the dedup_clusters fused-probe pattern;
-    # blocks and rows identical).
+    # On a plain scan (the registered k-means callers) base has no
+    # upstream shuffle, so localCheckpoint(eager=False) runs no job at
+    # the call; above a shuffle, AQE would run that shuffle stage at
+    # the call.  The deterministic-init toPandas below is the first
+    # action and materializes the blocks, instead of an
+    # eager-checkpoint job followed by a separate init read (blocks
+    # and rows identical).
     base = base.localCheckpoint(eager=False)
     C = np.array(
         base.orderBy(id_col).limit(k).toPandas()[vec_col].tolist(),

@@ -48,9 +48,9 @@ def _hash_work_partitions(
     # (Long.MaxValue unless overridden) — and plans DERIVED from an
     # unknown relation multiply it, so any estimate at or above the
     # conf value is sentinel-tainted, not a real size.  Compare against
-    # the actual conf (r15, r14 advisor: the old fixed 1 PiB cutoff
-    # would have mistaken a legitimate explode-heavy estimate at open
-    # scale for the sentinel and silently under-partitioned).  The
+    # the actual conf: a fixed 1 PiB cutoff would mistake a legitimate
+    # explode-heavy estimate at open scale for the sentinel and
+    # silently under-partition.  The
     # 2^20-partition clamp below still bounds genuine huge estimates.
     try:
         from tmp_parquet_merge_spark.operators.dedup import _parse_bytes
@@ -91,8 +91,8 @@ def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
     " word(?= )" alternation counts exactly the tokens the lambda
     counted (duplicates included, same as the DuckDB oracle's
     list_filter); the lookahead keeps consecutive stopwords from
-    swallowing each other's delimiter.  Each word is regex-escaped
-    (r6 advisor): today's en/de/fr lists are plain alphabetic so the
+    swallowing each other's delimiter.  Each word is regex-escaped:
+    today's en/de/fr lists are plain alphabetic so the
     escaped pattern is byte-identical, but a future list entry with a
     metacharacter ("c.", "+") must stay a token-equality match, not
     become a regex."""
@@ -236,8 +236,8 @@ def repetition_ratio(
     shingles (Gopher-style boilerplate/loop signal; 0 = no repeated
     n-grams).  Distinct counts ride the existing shingle pipeline's
     doc-keyed shuffle; totals are a scan-speed expression."""
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode
     # and the map-side partial aggregates run cluster-parallel
     df = spread_scan(df, id_col)
     from tmp_parquet_merge_spark.operators.dedup import shingle_rows
@@ -272,8 +272,8 @@ def tfidf_top_terms(
     BEFORE ranking so both engines rank identically; ties break on the
     term for full determinism.
     """
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode
     # and the map-side partial aggregates run cluster-parallel
     df = spread_scan(df, id_col)
     from pyspark.sql import Window
@@ -314,8 +314,8 @@ def token_entropy(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     order-independent sum (double summation order varies across
     engines and partitionings).
     """
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode
     # and the map-side partial aggregates run cluster-parallel
     df = spread_scan(df, id_col)
     tok = df.select(F.col(id_col), F.explode(words(text_col)).alias("term"))
@@ -358,8 +358,8 @@ def ngram_freq(
     top-k via TakeOrderedAndProject.  Ties break lexicographically so
     both engines rank identically.
     """
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode
     # and the map-side partial aggregates run cluster-parallel
     df = spread_scan(df, id_col)
     from tmp_parquet_merge_spark.operators.dedup import shingle_rows
@@ -435,8 +435,8 @@ def vocab(df: DataFrame, text_col: str, id_col: str, *, k: int = 1000) -> DataFr
     row_number over the k survivors only (a single-partition window on
     k rows, not on the corpus — deliberate and bounded).
     """
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode
     # and the map-side partial aggregates run cluster-parallel
     df = spread_scan(df, id_col)
     from tmp_parquet_merge_spark.operators.dedup import words
@@ -508,8 +508,8 @@ def bm25_topk(
     contribution follows the exact same operation order as the DuckDB
     oracle text (IEEE doubles: same ops on same values ⇒ same bits).
     """
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode
     # and the map-side partial aggregates run cluster-parallel
     df = spread_scan(df, id_col)
     from pyspark.sql import Window
@@ -574,11 +574,11 @@ def collocation_pmi(
     input), so each token appears exactly ONCE as ``w1`` — unigram
     counts are the w1-marginals of the same aggregate, and no per-doc
     window (and therefore NO doc-keyed exchange of the exploded corpus)
-    exists anywhere in the plan.  r15: this replaces the r11 posexplode
+    exists anywhere in the plan.  This replaces a posexplode
     + ``lead``-window + full-token-relation localCheckpoint spelling,
     whose checkpoint erased the spread's doc partitioning and forced
-    the window to re-shuffle every token row (r14 verdict "What's
-    wrong" #1 — the corpus crossed the wire twice).  arrays_zip/slice
+    the window to re-shuffle every token row (the corpus crossed the
+    wire twice).  arrays_zip/slice
     are ordinary codegen expressions, not per-element lambdas, so the
     CollapseProject re-evaluation trap that bars F.transform here does
     not apply.  The one surviving corpus-sized exchange is the
@@ -663,8 +663,8 @@ def unigram_lm_score(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     is rounded then summed as DECIMAL(18,6) (order-independent), and
     the final mean is one double division, like token_entropy.
     """
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode
     # and the map-side partial aggregates run cluster-parallel
     df = spread_scan(df, id_col)
     tok = df.select(F.col(id_col), F.explode(words(text_col)).alias("term"))
@@ -707,8 +707,8 @@ def lm_buckets(
       ``round(double/double, 6)`` — ``sum/n_tokens`` can land exactly
       on a half tie at the 6th decimal (observed at sf0.1:
       −95.082190/28 = −3.3957925), where Spark's HALF_UP on the binary
-      double and DuckDB's shortest-repr rounding disagree by 1e-6 (the
-      r10 advisor's predicted tie class).  Instead the mean is rounded
+      double and DuckDB's shortest-repr rounding disagree by 1e-6 (a
+      predicted tie class).  Instead the mean is rounded
       in EXACT integer arithmetic: s_int = s·10⁶ (exact — s has scale
       6), micro = sign · ((2·|s_int| + n) intdiv (2·n)) is
       round-half-away-from-zero of s_int/n with no floats, and
@@ -727,8 +727,8 @@ def lm_buckets(
     window is a range-partitioned sort — the same shape CCNet's
     per-language percentile split pays.
     """
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode
     # and the map-side partial aggregates run cluster-parallel
     df = spread_scan(df, id_col)
     from pyspark.sql import Window
@@ -801,9 +801,9 @@ def bigram_lm_score(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
       p(w|v) = 0.75·c(v,w)/c(v) + 0.25·c(w)/N
 
-    Plan (r15 re-measured A/B/C at sf0.1 AND the 25× replica —
-    OPTIMIZATION_r15.md §1): posexplode + one per-doc ``lead`` window
-    feeds the (doc, v, w2) tf hash-agg, which is checkpointed once.
+    Plan (A/B/C measured at sf0.1 AND the 25× replica): posexplode +
+    one per-doc ``lead`` window feeds the (doc, v, w2) tf hash-agg,
+    which is checkpointed once.
     This keeps two properties the :func:`collocation_pmi` arrays_zip
     spelling (variant B, tried and REJECTED here) loses: the window
     needs only doc-hash clustering, which the deficient-scan spread
@@ -814,10 +814,10 @@ def bigram_lm_score(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     the exploded rows carry ONE string, not the zip struct's two (the
     zip variant shuffled/aggregated ~2× the string bytes and measured
     6.4-7.3 s with 30 s GC spikes at the 25× replica vs 4.4 s stable
-    for this shape).  The r14 defect here was ONLY the unigram branch:
-    it re-ran the scan+SPREAD+explode subtree (a second full corpus
-    exchange at sf-tier, ~4-5 s of the old 7 s) — the back-off model
-    now tokenizes the RAW scan directly (map-only, vocabulary-bounded
+    for this shape).  The unigram branch must not re-run the
+    scan+SPREAD+explode subtree (a second full corpus exchange at
+    sf-tier, ~4-5 s of a 7 s query) — the back-off model
+    tokenizes the RAW scan directly (map-only, vocabulary-bounded
     partial agg, no exchange, no spread).  The model relations are
     bigram-/unigram-vocabulary-bounded aggregates joined back on their
     keys, and the corpus total is a broadcast 1-row aggregate — model
@@ -860,7 +860,7 @@ def bigram_lm_score(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # back-off term sees every word exactly once per occurrence.  It
     # tokenizes the RAW scan — map-only, vocabulary-bounded partial
     # agg, NO spread: routing it through the spread relation re-ran
-    # the corpus exchange just to count words (the r14 sf-tier cost)
+    # the corpus exchange just to count words (the sf-tier cost)
     cw = raw.select(F.explode(ws).alias("w2")).groupBy("w2").agg(
         F.count(F.lit(1)).alias("cw")
     )
@@ -890,7 +890,7 @@ def bigram_lm_score(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
     # keep-all-docs id list reads the RAW scan: routing it through the
     # spread relation would pay the conditional exchange just to list
-    # ids (same r15 lesson as the unigram branch above)
+    # ids (same lesson as the unigram branch above)
     base = raw.select(F.col(id_col))
     return base.join(scored, id_col, "left").select(
         F.col(id_col),
@@ -916,8 +916,8 @@ def tokenizer_fertility(
     cross-engine parity is free); the scan is two codegen
     regexp_counts per row, no shuffle beyond the |langs|-row hash-agg.
     """
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode
     # and the map-side partial aggregates run cluster-parallel
     df = spread_scan(df, id_col)
     c = F.col(text_col) if isinstance(text_col, str) else text_col
@@ -963,9 +963,9 @@ def winnowing_select(
     sets (any shared substring of length ≥ k+w−1 shares a selected
     hash).
 
-    Long documents chunk TRANSPARENTLY (r12 verdict #4 — the previous
-    spelling raise_error'd past 2²⁰ chars, making million-char crawl
-    pages unrunnable): each document splits into chunks of
+    Long documents chunk TRANSPARENTLY (raising past 2²⁰ chars would
+    make million-char crawl pages unrunnable): each document splits
+    into chunks of
     ``chunk_positions`` gram positions with stride ``chunk_positions −
     (w−1)``, so consecutive chunks overlap by exactly w−1 positions
     (= w+k−2 chars) and every w-gram window of the original document
@@ -993,9 +993,9 @@ def winnowing_select(
     min.
 
     Chunk slices shuffle ONCE on (id, chunk-offset) before the gram
-    explode (r14 optimization round — this replaces the r13 opt-in
-    ``repartition_chunks_above`` two-branch spelling, which kept the
-    gram-row exchange as the default path).  Guide §2.3 economics:
+    explode (this replaces an opt-in ``repartition_chunks_above``
+    two-branch spelling, which kept the gram-row exchange as the
+    default path).  Guide §2.3 economics:
     the window's clustering requirement is satisfied either way, but
     satisfying it by exchanging GRAM ROWS moves ~40 B × every gram
     position (≈ 40× corpus bytes), while exchanging the already-
@@ -1008,7 +1008,7 @@ def winnowing_select(
     even when the scan side has few splits (one small parquet file
     locally; a handful of 100 MB outlier documents in a crawl shard)
     instead of sitting in the task that held the parent row —
-    the r13 "straggler" opt-in is now simply the only path, for all
+    the "straggler" path is simply the only path, for all
     documents.  Selection-set equality with the pure-Python reference
     is pinned in the hypothesis property suite."""
     from pyspark.sql import Window
@@ -1130,7 +1130,7 @@ def winnowing_select(
     # columns (winnow_overlap_pairs' (id, h)-distinct subsumes it):
     # the emitted multiset differs only in duplicated selections —
     # adjacent windows sharing a min, chunk-overlap repeats — never in
-    # the selected SET (r14 optimization round, one exchange saved).
+    # the selected SET (one exchange saved).
     sel = _selected(chunks)
     return sel.distinct() if dedup else sel
 
@@ -1209,8 +1209,8 @@ def zipf_fit(
     Spark built-ins with the same Welford-style moments DuckDB uses;
     outputs are single roundings of the fitted moments (the
     q_grouped_apply precedent)."""
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode
     # and the map-side partial aggregates run cluster-parallel
     df = spread_scan(df, id_col)
     from pyspark.sql import Window
@@ -1268,7 +1268,7 @@ def winnow_overlap_pairs(
     hashes are deterministic, so the df cut is reproducible
     cross-engine and spelled identically in the oracle."""
     # dedup=False: the (id, h)-distinct below subsumes the selection-
-    # set distinct, so the raw multiset skips one full exchange (r14)
+    # set distinct, so the raw multiset skips one full exchange
     sel = winnowing_select(df, text_col, id_col, k=k, w=w, dedup=False)
     # four consumers (per-doc sizes, doc-frequency cut, both join
     # sides) — checkpoint the small (id, h) relation so the md5
@@ -1343,7 +1343,7 @@ def heaps_fit(
     from tmp_parquet_merge_spark.operators.dedup import words
     from pyspark.sql import Window
 
-    # n_docs BEFORE the spread (r15, the r14 q_heaps_fit driver-sweep
+    # n_docs BEFORE the spread (a measured q_heaps_fit
     # regression): count() on the raw scan is a metadata-only parquet
     # aggregate pushdown, but count() over the repartitioned relation
     # executes the full corpus exchange just to count rows
@@ -1428,8 +1428,8 @@ def cms_heavy_hitters(
     map-side, so the shuffle carries ≤ d·w rows per partition.  The
     exact column is the verify stage (vocabulary-bounded hash-agg +
     heap cut); at open scale it drops and the sketch stands alone."""
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode
     # and the map-side partial aggregates run cluster-parallel
     df = spread_scan(df, id_col)
     from tmp_parquet_merge_spark.operators.dedup import words
@@ -1539,8 +1539,8 @@ def bpe_train(
     exactly greedy left-to-right non-overlap, since the merged symbol
     l||r can never equal l.  No UDF anywhere.
     """
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode
     # and the map-side partial aggregates run cluster-parallel
     df = spread_scan(df, text_col)
     from tmp_parquet_merge_spark.operators.dedup import words
@@ -1633,8 +1633,8 @@ def bpe_apply(
     symbolization joins back on the word key, and the result is a
     |sources|-row aggregate.  Nothing after the first hash-agg exceeds
     vocabulary × sources rows at any corpus scale."""
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode
     # and the map-side partial aggregates run cluster-parallel
     df = spread_scan(df, text_col)
     from tmp_parquet_merge_spark.operators.dedup import words

@@ -64,7 +64,7 @@ _PAIR_CAP = 20_000
 # stays O(probe²) at any corpus scale.  Covers the whole bundled
 # corpora (500 vectors), so driver-visible values are true global
 # recall at the oracle tiers.  (q_dedup_embedding_lsh graduated off
-# its stamp in r11 — the multi-probe over-fetch makes it
+# its stamp — the multi-probe over-fetch makes it
 # oracle-backed; kept for any future approximate family member.)
 _RECALL_PROBE = 500
 _W_CAP = _W.replace("FROM documents", f"FROM documents WHERE doc_id < {_PAIR_CAP}")
@@ -148,8 +148,8 @@ def q_dedup_ngram(spark, sf_dir):
 @query("q_dedup_minhash", oracle=_uncapped(_NGRAM_JACCARD_ORACLE))
 def q_dedup_minhash(spark, sf_dir):
     """MinHash(64) + LSH(16 bands × 4 rows ⇒ ~0.5 Jaccard S-curve knee)
-    candidate pairs, verified with exact shingle Jaccard.  Oracle
-    (r7): murmur3 banding isn't reproducible in SQL, but the VERIFIED
+    candidate pairs, verified with exact shingle Jaccard.  Oracle:
+    murmur3 banding isn't reproducible in SQL, but the VERIFIED
     output is — on the bundled corpora every true pair survives
     banding (pinned in tests/test_llm_ops.py::
     test_minhash_verified_equals_exact_at_half), so the exact-Jaccard
@@ -215,8 +215,8 @@ def q_dedup_segments(spark, sf_dir):
     corpus-vocabulary-bounded; at open scale, group by xxhash64(segment)
     digests and keep min(segment) as the representative to shrink
     shuffle bytes further (the q_dedup_exact digest discipline).
-    r11: body extracted to operators/dedup.py::segment_blacklist (same
-    plan, window width now a parameter) so the hypothesis property
+    The body lives in operators/dedup.py::segment_blacklist (window
+    width a parameter) so the hypothesis property
     suite can pin it against a pure-Python reference at small n."""
     return dedup.segment_blacklist(
         t(spark, sf_dir, "documents"), "text", "doc_id", n=10
@@ -282,9 +282,9 @@ def q_segments_clean(spark, sf_dir):
     order-safe spelling (collect_list alone has no ordering
     contract).  Shuffles carry bounded ≤10-word segments keyed by
     segment or doc_id; nothing is quadratic and no full text rides
-    more than one shuffle.  r11: body extracted to
-    operators/dedup.py::segments_clean (same plan, window width now a
-    parameter) so the hypothesis property suite can pin it against a
+    more than one shuffle.  The body lives in
+    operators/dedup.py::segments_clean (window width a parameter) so
+    the hypothesis property suite can pin it against a
     pure-Python stride reference at small n."""
     return dedup.segments_clean(
         t(spark, sf_dir, "documents"), "text", "doc_id", n=10
@@ -493,12 +493,12 @@ def q_dedup_editdist(spark, sf_dir):
 
 @query("q_dedup_editdist_lsh", oracle=_uncapped(_EDITDIST_ORACLE))
 def q_dedup_editdist_lsh(spark, sf_dir):
-    """The 100 TB spelling of q_dedup_editdist (r5 verdict #4):
+    """The 100 TB spelling of q_dedup_editdist:
     candidate pairs come from MinHash-LSH (shuffle O(docs × bands),
     bodies never enter the blocking join) and Levenshtein runs as a
     verify over id-joined candidates only — normalized text moves for
     candidate ids alone, so verify cost tracks |candidates|, not
-    |corpus|².  Oracle (r7): the exact blocked-join SQL — on the
+    |corpus|².  Oracle: the exact blocked-join SQL — on the
     bundled corpora every small-edit pair shares its 2-word prefix
     AND sits far above the LSH S-curve knee, so the two plans are
     row-for-row equal (pinned in tests/test_llm_ops.py::
@@ -568,20 +568,20 @@ _SIMHASH_SIG = " + ".join(
 )
 def q_dedup_simhash(spark, sf_dir):
     """SimHash(64-bit) near-dup pairs, Hamming ≤ 8 — EXACT and
-    oracle-backed since r12: the token hash moved from xxhash64 to
-    md5-pieces (the one 64-bit hash DuckDB spells identically) and the
-    banded candidate join generalized to multi-index hashing (4
+    oracle-backed: the token hash is md5-pieces rather than xxhash64
+    (the one 64-bit hash DuckDB spells identically) and the banded
+    candidate join is multi-index hashing (4
     16-bit bands probing Hamming-2 balls — pigeonhole-exact for
-    radius 8, where the r11 f=0 banding was only exact to Hamming 3
+    radius 8, where f=0 banding would be only exact to Hamming 3
     and silently lossy above; operators/dedup.py::simhash_dedup_pairs).
     The oracle recomputes the signatures in SQL (64 per-bit vote
     aggregates over the same md5 pieces) and verifies pairs by exact
     all-pairs bit_count at test scale.
 
-    The r8-era 3-gram Jaccard stamp is GONE (r12): it existed to give
-    the rows-only driver check quality evidence, and with the exact
-    oracle that evidence is the hash compare itself.  It was also the
-    25× scale bottleneck — the (pair × shingles) stamp join fanned out
+    There is no 3-gram Jaccard stamp: it would only give the rows-only
+    driver check quality evidence, and with the exact oracle that
+    evidence is the hash compare itself.  Such a stamp was also the
+    measured 25× scale bottleneck — the (pair × shingles) stamp join fanned out
     to ~|pairs|·|shingles/doc| rows (measured 64 s of the query's 25×
     cost; signatures + MIH verify alone are a fraction of that).
     Pair-quality analysis at corpus scale belongs to the sampled
@@ -661,7 +661,7 @@ def q_dedup_cluster_lsh(spark, sf_dir):
     """The 100 TB spelling of q_dedup_cluster: pairs from MinHash-LSH
     candidates (shuffle O(docs × bands), document text never moves)
     verified with exact shingle Jaccard, then the same min-label
-    propagation.  Oracle (r7): the exact twin's recursive-CTE SQL —
+    propagation.  Oracle: the exact twin's recursive-CTE SQL —
     the bundled corpora's near-dup pairs sit far above the 16×4
     S-curve knee, so verified-LSH pairs equal exact pairs and the
     composed pipelines are row-for-row equal (pinned in
@@ -732,18 +732,18 @@ def q_dedup_embedding_lsh(spark, sf_dir):
     candidates (shuffle = O(vectors × bands × bits) int keys, never a
     cartesian), exact cosine ≥ 0.4 on candidates only.  Banding is
     corpus-adaptive (similarity._auto_lsh_params), sized at the
-    OPERATING threshold (r10), and — r11, the q_ann_lsh r8 protocol
-    applied to the pair problem — over-fetched with Hamming-1
+    OPERATING threshold, and — the q_ann_lsh protocol applied to the
+    pair problem — over-fetched with Hamming-1
     multi-probe (Lv et al. 2007: the probe side also checks every band
     key with one bit flipped, int-XOR arithmetic on packed band keys)
     at target_recall 1-1e-5, so per-pair miss probability at the 0.4
     boundary is ≤ 1e-5 and the emitted pair set is row-identical to
     the exact twin q_dedup_embedding (uncapped) on the bundled
     corpora: 66/66, 59/59, 920/920 at sf0.001/0.01/0.1, equality
-    pinned in tests/test_llm_ops.py.  ORACLE (r11 graduation, r10
-    verdict #2): the exact all-pairs SQL — candidates are verified
+    pinned in tests/test_llm_ops.py.  ORACLE: the exact all-pairs
+    SQL — candidates are verified
     with the SAME exact cosine, so output ⊆ exact always, and the
-    over-fetch closes the gap measured at 0.93-0.97 by the r10 recall
+    over-fetch closes the gap measured at 0.93-0.97 by the recall
     stamps.  The honest open-scale law is unchanged (SCALE.md): the
     64-band cap fixes per-pair miss probability at bundled n; at
     1000× the corpus, bits track log2(n) and recall at loose cosine
@@ -754,7 +754,7 @@ def q_dedup_embedding_lsh(spark, sf_dir):
     [0.40, 0.61] with non-pairs 1e-4 below the cut), so candidates ≈
     all pairs HERE while the banded shape stays sub-quadratic at real
     near-dup thresholds — both regimes measured in SCALE.md.
-    REGIME SWITCH (r11, from the 25× sweep's 53× blow-up): when the
+    REGIME SWITCH (from the 25× sweep's 53× blow-up): when the
     auto-sizing's analytic background candidate fraction saturates
     (≥5% of RANDOM pairs would collide — banding is inspecting ~all
     pairs anyway) and the corpus fits the broadcast cap, the builder
@@ -865,7 +865,7 @@ def q_knn_classify(spark, sf_dir):
 
 @query(
     "q_ann_lsh",
-    # Exact-twin oracle (r8, the dedup-LSH conversion pattern): the
+    # Exact-twin oracle (the dedup-LSH conversion pattern): the
     # 512-bit SRP sketch + 300-candidate over-fetch + exact re-rank
     # covers the true top-10 on EVERY bundled corpus (recall 1.0 at
     # sf0.001, sf0.01 AND sf0.1, pinned in tests/test_llm_ops.py — the
@@ -894,7 +894,7 @@ def q_knn_classify(spark, sf_dir):
 def q_ann_lsh(spark, sf_dir):
     """Approximate top-k via SRP sketches: 512-bit signatures ranked
     by Hamming distance, 300-candidate over-fetch, exact cosine
-    re-rank (similarity.ann_topk).  Replaces the r7 banded form whose
+    re-rank (similarity.ann_topk).  Replaces a banded form whose
     4×4-bit bands measured 25/50 missed pairs — banding cannot
     separate cos 0.3 signal from cos 0.0 noise; sketch RANKING uses
     all 512 bits and can.  Oracle: brute-force exact twin (candidate
@@ -947,14 +947,14 @@ def q_ann_ivf(spark, sf_dir):
     """IVF ANN: corpus assigned to nearest of 16 k-means-fitted
     centroids, queries probe their 6 nearest cells.  Rows-only
     (approximate by design) — but the output carries MEASURED quality
-    (r8, the q_kmeans fit-metadata pattern): recall_at_k per query vs
+    (the q_kmeans fit-metadata pattern): recall_at_k per query vs
     the exact brute-force twin, so the rows-only driver check sees
     answer quality, not just opaque row counts.  The exact pass is
     the verify stage (broadcast queries, one corpus matmul pass) —
     the standard recall-evaluation harness an ANN index ships with;
     at corpus scale it runs on the same sampled query set.
 
-    n_probe=6 (r9): measured recall 0.90/0.90/0.96 at
+    n_probe=6: measured recall 0.90/0.90/0.96 at
     sf0.001/0.01/0.1 on the bundled (uniform — IVF's worst-case)
     vectors, vs 0.86/0.84/0.94 at the old n_probe=4, while still
     pruning 10/16 cells; the ≥0.85 mean floor is pinned in
@@ -1519,7 +1519,7 @@ def _contamination_join(docs, pairs):
 def q_contamination_lsh(spark, sf_dir):
     """The 100 TB spelling of q_contamination: MinHash-LSH candidates +
     exact Jaccard verify (O(docs × bands) shuffle, no all-pairs stage)
-    composed with the same split assignment.  Oracle (r7): the exact
+    composed with the same split assignment.  Oracle: the exact
     twin's SQL — the composed pipelines are row-for-row equal on the
     bundled corpora (pinned in tests/test_llm_ops.py::
     test_lsh_twin_queries_equal_exact_on_bundled_corpus) and the hash
@@ -1718,7 +1718,7 @@ def q_multimodal_features(spark, sf_dir):
     Arrow-batched mapInPandas feature extraction (deterministic fake
     standing in for the decode step — codecs absent in this env).
 
-    Oracle (r7): the byte-histogram fallback is closed-form over the
+    Oracle: the byte-histogram fallback is closed-form over the
     payload bytes (bin = high hex nibble), so DuckDB re-derives the
     histogram by counting nibbles in hex(payload).  The registered
     output serializes the EXACT integer counts (recovered from the
@@ -1726,7 +1726,7 @@ def q_multimodal_features(spark, sf_dir):
     float is k/n with k ≤ n ≤ payload bytes) rather than fixed-point
     floats: integer strings hash identically with no HALF_UP-vs-
     half-even formatter skew, and row-oriented canonicalizers can't
-    hash list cells anyway (the r3 driver crash).  Downstream
+    hash list cells anyway (a driver crash).  Downstream
     pipelines use the operator directly and keep the real normalized
     array.  The synthesized text payloads never parse as images, so
     the byte fallback is the computed path with or without codecs
@@ -1781,8 +1781,8 @@ def q_multimodal_features(spark, sf_dir):
 )
 def q_frame_sample(spark, sf_dir):
     """Frame-sampling plumbing: posexplode sampled byte offsets of each
-    payload, slice bytes per frame — pure JVM, no Python.  Oracle
-    (r7): the payload is the deterministic UTF-8 encoding of the
+    payload, slice bytes per frame — pure JVM, no Python.  Oracle:
+    the payload is the deterministic UTF-8 encoding of the
     document text, so the 16-byte frames at every 64-byte offset are
     closed-form — the registered query returns the frame as hex
     (DuckDB BLOBs surface as unhashable bytearrays in the driver's
@@ -1898,7 +1898,7 @@ def q_bm25(spark, sf_dir):
     """,
 )
 def q_rank_fusion(spark, sf_dir):
-    """Hybrid retrieval via reciprocal-rank fusion (r9): the BM25
+    """Hybrid retrieval via reciprocal-rank fusion: the BM25
     top-20 (q_bm25's exact list) fused with the embedding-cosine
     top-20 for document 0's vector (doc_id ≡ vec_id in the bundled
     corpus) by the standard RRF score Σ 1/(60 + rank) — the
@@ -2091,11 +2091,11 @@ def q_ann_pq(spark, sf_dir):
     index state is tens of times smaller than the vectors, the
     property that matters when the corpus is 100 TB.  Rows-only
     (approximate by design) — and, like q_ann_ivf, the output stamps
-    MEASURED per-query recall_at_k vs the exact brute-force twin
-    (r8), so the rows-only driver check sees answer quality, not
+    MEASURED per-query recall_at_k vs the exact brute-force twin,
+    so the rows-only driver check sees answer quality, not
     just row counts.
 
-    r9 knobs: the old 4×16 toy codebook measured recall 0.66/0.70/
+    Knobs: a 4×16 toy codebook measured recall 0.66/0.70/
     0.34 across the bundled tiers; 8×256 with a 10× re-rank measures
     1.0/1.0/0.96 (and 1.0 at the 25× stress replica), floor ≥0.9
     pinned in tests — ADC resolution, not re-rank depth, was the
@@ -2308,19 +2308,19 @@ def q_media_dedup(spark, sf_dir):
     """,
 )
 def q_media_neardup(spark, sf_dir):
-    """Perceptual near-dup over multimodal payloads (r10 verdict #3 —
-    the one dedup family q_media_dedup's exact sha2 missed): 64-bit
+    """Perceptual near-dup over multimodal payloads (the one dedup
+    family q_media_dedup's exact sha2 missed): 64-bit
     blockhash-gradient signature per payload (operators/multimodal.py
     :func:`blockhash_signatures` — block scores over hex(payload),
     dHash-style gradient bits; public technique: blockhash.io, Yang
     et al. 2006, Krawetz dHash), multi-index Hamming-ball candidate
     join (Norouzi et al. CVPR 2012: 4 disjoint 16-bit bands, each
     probing its Hamming-2 ball — pigeonhole-EXACT for radius 10, and
-    9.4× fewer background candidates than the r11 11-band f=0
-    spelling, whose candidate relation measured 36% of ALL pairs),
+    9.4× fewer background candidates than an 11-band f=0 spelling,
+    whose candidate relation measured 36% of ALL pairs),
     exact Hamming verify ≤ 10.  Deterministic output, hence the
     closed-form DuckDB oracle (the q_multimodal_features hex(payload)
-    protocol) — the r12 band change is plan-only, the pair set is
+    protocol) — the band layout is plan-only, the pair set is
     identical.  Scale shape: one payload scan → 2 longs + 4 ints per
     item; shuffles carry only (band, key, id) ints and id pairs;
     verify is JVM bit_count on packed longs.  Non-degenerate at every
@@ -2451,7 +2451,7 @@ def _bpe_round_ctes(n_merges: int) -> list[str]:
         # is exhausted m{k} is EMPTY, and a cross join would empty
         # v{k} and every later round — the apply oracle would then
         # return zero rows while Spark's loop break keeps the last
-        # symbolization (mid-round r14 review).  With the left join an
+        # symbolization.  With the left join an
         # empty m{k} leaves s unchanged, matching the break exactly
         # (p{k+1} recomputes the same pairs, m{k+1} stays empty).
         cte.append(f"""v{k} AS (
@@ -2525,7 +2525,7 @@ def q_bpe_apply(spark, sf_dir):
 
 @query("q_bpe_train", oracle=_bpe_train_oracle(8))
 def q_bpe_train(spark, sf_dir):
-    """Multi-round BPE tokenizer training (r13 verdict #4): 8 fixed
+    """Multi-round BPE tokenizer training: 8 fixed
     merge rounds over the documents corpus — the iterative form of
     q_bpe_merge's single step, completing the tokenizer family
     (fertility / perplexity / vocab / single-merge already exist).

@@ -118,7 +118,7 @@ def _exact_group_percentiles(
     """Exact per-group interpolated percentiles computed WITHOUT a
     per-group total sort — the distributed order-statistics selection
     that keeps a 3-distinct-value group key from capping the stage at
-    3 tasks (r14 verdict "Next round" #6; guide §2.2/§2.5 skew: a
+    3 tasks (guide §2.2/§2.5 skew: a
     single giant key's sort cannot be split, so don't sort — select).
 
     Three parallel passes replace ``F.percentile``'s per-group
@@ -156,7 +156,7 @@ def _exact_group_percentiles(
     rows = df.select(
         F.col(group_col).alias("__g"), v.alias("__v")
     ).filter(F.col("__v").isNotNull())
-    # NO spread_scan here (measured r15): a keyless round-robin spread
+    # NO spread_scan here (measured): a keyless round-robin spread
     # of the 600k-row value relation cost MORE than the single-task
     # map passes it parallelized (warm 2.8 -> 3.9 s — the repartition
     # pays sortBeforeRepartition plus a corpus exchange per consumer
@@ -266,7 +266,7 @@ def q_agg_sketch(spark, sf_dir):
     instead of all distinct values / a per-group sort).  Rows-only:
     sketch internals are engine-specific by design — but the output
     carries the exact twins and the measured relative error per group
-    (r8, the recall_at_k pattern), so the rows-only driver check sees
+    (the recall_at_k pattern), so the rows-only driver check sees
     sketch ACCURACY, not just plausible numbers.  The exact columns
     are the verify stage: at open scale they drop and only the sketch
     columns remain (which is the whole point of the sketches)."""
@@ -275,8 +275,8 @@ def q_agg_sketch(spark, sf_dir):
     # key, NOT one combined agg: countDistinct forces an Expand, and
     # exact percentile over the expanded rows degrades the whole
     # aggregate to a spilling sort path — the combined spelling
-    # measured 9–14 s at sf0.1 (flagged REGRESSION by the r8 bench
-    # watchlist) vs ~2 s for this shape, where each aggregate keeps
+    # measured 9–14 s at sf0.1 vs ~2 s for this shape, where each
+    # aggregate keeps
     # its own optimal strategy and the joins are 3-row broadcasts.
     ap = li.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx_parts"),
@@ -286,7 +286,7 @@ def q_agg_sketch(spark, sf_dir):
     cd = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("exact_parts")
     )
-    # r15 (r14 verdict "Next round" #6): F.percentile's per-group
+    # F.percentile's per-group
     # sort-aggregate was capped at 3 tasks by the 3-row group key —
     # the bucket-selection helper computes bit-identical values (see
     # its docstring + tests/test_exact_percentiles.py) from three
@@ -1010,7 +1010,7 @@ def q_join_asof_forward(spark, sf_dir):
 )
 def q_join_asof_tolerance(spark, sf_dir):
     """Bounded-staleness as-of join (pandas ``merge_asof(tolerance=)``
-    semantics, r9): each purchase matches the same user's most recent
+    semantics): each purchase matches the same user's most recent
     prior view ONLY if it is at most 1 hour stale; older views come
     back NULL — last-touch attribution with a freshness window.  EXACT
     under backward as-of, not an approximation: if the latest
@@ -1654,7 +1654,7 @@ def q_hll_rollup(spark, sf_dir):
     never needed).  Uses Spark's DataSketches HLL aggregates
     (hll_sketch_agg / hll_union_agg / hll_sketch_estimate).  Rows-only:
     DuckDB has no compatible sketch — but the output carries the exact
-    distinct count and the measured relative error per type (r8, the
+    distinct count and the measured relative error per type (the
     recall_at_k pattern), so the driver-visible rows certify the 5%
     accuracy contract the tests pin.  The exact column is the verify
     stage; at open scale it drops and the sketches stand alone."""
@@ -1845,7 +1845,7 @@ def q_pagerank(spark, sf_dir):
     they share an order, symmetrized): the canonical iterative
     join-aggregate, 10 damped rounds — the same loop discipline
     (persisted pre-partitioned edges, scalar-only driver traffic) as
-    k-means and connected components.  Oracle (r7): a fixed 10-round
+    k-means and connected components.  Oracle: a fixed 10-round
     unrolled CTE chain — the registered query pins ``tol=0`` so the
     round count is closed-form at every sf (the L1 early exit stays
     exercised in tests/test_graph.py); ranks round to 6 decimals on
@@ -1872,12 +1872,12 @@ def q_pagerank(spark, sf_dir):
     # (~128 MB/partition), not a constant.
     # symmetric=True: the edges come from symmetrize(), so the node
     # set is the out-degree key set — the nodes union+distinct pass,
-    # the degree left-join and the dangling probe all drop out (r14
-    # optimization round; results identical by construction).  The
+    # the degree left-join and the dangling probe all drop out
+    # (results identical by construction).  The
     # small-state broadcast gate then removes both per-round state
     # exchanges at bench scale while the >100k-node path keeps the
     # pre-partitioned sort-merge loop — see graph.pagerank's docstring
-    # and OPTIMIZATION_r14.md for the measured A/B.
+    # for the measured A/B.
     return graph.pagerank(
         edges,
         damping=0.85,
@@ -1998,7 +1998,7 @@ def q_quantile_norm(spark, sf_dir):
 
     A naive rank().over(Window.orderBy(...)) with no partitionBy plans
     Exchange SinglePartition — every row through ONE task, the classic
-    100 TB scale-killer (r3 advice).  Scalable form instead: bucket the
+    100 TB scale-killer.  Scalable form instead: bucket the
     rows by k-bounded percentile cut points (one tiny driver pull, the
     centroid-init pattern), rank WITHIN each bucket via a partition-
     local window, and add per-bucket offsets (second k-bounded pull,
@@ -2781,8 +2781,8 @@ def q_recursive_cte(spark, sf_dir):
     duplicate paths out of the answer without per-round dedup.
 
     The edge relation is built ONCE with the one-shuffle
-    cooccurrence_pairs array expansion (operators/graph.py) and lazily
-    checkpointed before the recursion: Spark inlines (re-derives)
+    cooccurrence_pairs array expansion (operators/graph.py) and
+    checkpointed (eager=False) before the recursion: Spark inlines (re-derives)
     plain CTEs per reference, so the 600k×600k order self-join would
     otherwise run for the seed scan AND every recursion round — 9.6 s
     → ~2 s at sf0.1.  The oracle spells the same edge set relationally
@@ -3255,7 +3255,7 @@ def q_anomaly_rate(spark, sf_dir):
     warm-up hours (< 12 trailing) suppressed.  A perfectly constant
     baseline (sd = 0, the cron-heartbeat regime) flags by exact
     comparison against the constant instead — z stays NULL but the
-    alarms still fire (r14 review); NULL event_type rows are excluded
+    alarms still fire; NULL event_type rows are excluded
     up front (a NULL key never equi-joins to its spine).  Counts are exact
     integers; moments are single roundings (the q_zipf_fit parity
     contract).  Plan: one corpus-size hash-agg to the (type, hour)

@@ -445,10 +445,10 @@ def q_sql_tpch_q2(spark, sf_dir):
     — both aggs share the partkey shuffle key so AQE reuses the
     exchange.  MIN of identical doubles is selection, not accumulation,
     so cross-engine hash parity holds without the decimal detour.
-    r15: the deficient-scan spread keys on the supply aggregate's own
+    The deficient-scan spread keys on the supply aggregate's own
     (l_partkey, l_suppkey) so the aggregate reuses the spread exchange
-    (the default orderkey spread added a second full-table shuffle
-    here — r14 advisor)."""
+    (the default orderkey spread would add a second full-table
+    shuffle here)."""
     li = t_spread(spark, sf_dir, "lineitem", key=("l_partkey", "l_suppkey"))
     supply = li.groupBy(
         F.col("l_partkey").alias("sp_partkey"),
@@ -590,10 +590,10 @@ def q_sql_tpch_q11(spark, sf_dir):
     (Spark reuses the shuffle; the second pass over it is a cheap
     re-agg of 2 000 rows).  Both engines sum the identical per-part
     doubles through DECIMAL(18,6), so the > comparison sees
-    bit-identical operands on borderline parts.  r15: the
+    bit-identical operands on borderline parts.  The
     deficient-scan spread keys on l_partkey — the partval aggregate's
-    key — so it is reused instead of stacking under a second shuffle
-    (r14 advisor)."""
+    key — so it is reused instead of stacking under a second
+    shuffle."""
     li = t_spread(spark, sf_dir, "lineitem", key="l_partkey")
     s = t(spark, sf_dir, "supplier")
     n = t(spark, sf_dir, "nation")
@@ -761,9 +761,9 @@ def q_sql_tpch_q17(spark, sf_dir):
     partkey applies the comparison.  The threshold frame is ~|parts|
     rows and broadcasts; lineitem is scanned twice (spec shape) but
     the threshold pass reads only (partkey, quantity) thanks to column
-    pruning.  r15: the deficient-scan spread keys on l_partkey — the
+    pruning.  The deficient-scan spread keys on l_partkey — the
     threshold aggregate's key (the main branch joins only broadcasts,
-    so the spread is its only exchange either way; r14 advisor)."""
+    so the spread is its only exchange either way)."""
     li = t_spread(spark, sf_dir, "lineitem", key="l_partkey")
     p = t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
     thr = li.groupBy(F.col("l_partkey").alias("t_partkey")).agg(

@@ -55,28 +55,33 @@ def t_spread(
 ) -> DataFrame:
     """:func:`t`, plus a conditional repartition for the fact tables
     when the scan has fewer splits than the cluster's parallelism
-    (r14 optimization round — dedup.spread_scan; no-op on any real
-    multi-file dataset).  Used by the SQL-view registration helpers so
-    aggregate/join-heavy queries get cluster-parallel map sides on
-    one-row-group local files; every aggregate in those queries
-    follows the repo's DECIMAL(18,6) order-independent-sum discipline,
-    so the layout change cannot perturb results (full oracle parity
-    re-verified after the change).  Plain scans keep :func:`t` — a
+    (:func:`dedup.spread_scan`; no-op on any real multi-file dataset).
+    Used by the SQL-view registration helpers so aggregate/join-heavy
+    queries get cluster-parallel map sides on one-row-group local
+    files; every aggregate in those queries follows the repo's
+    DECIMAL(18,6) order-independent-sum discipline, so the layout
+    change cannot perturb results.  Plain scans keep :func:`t` — a
     shuffle would only add cost there.
 
-    ``key`` (r15, r14 advisor): override the default orderkey spread
-    key with the column(s) the query's FIRST exchange actually
-    clusters on (q2's (l_partkey, l_suppkey) supply aggregate, q11's
-    and q17's l_partkey aggregates) so the deficient-scan spread
-    exchange is REUSED downstream instead of adding a second
-    full-table shuffle before it."""
-    df = t(spark, sf_dir, name)
+    ``key`` overrides the default orderkey spread key with the
+    column(s) the query's FIRST exchange actually clusters on (q2's
+    (l_partkey, l_suppkey) supply aggregate, q11's and q17's l_partkey
+    aggregates) so the deficient-scan spread exchange is REUSED
+    downstream instead of adding a second full-table shuffle before
+    it.  It applies only to the spread fact tables; passing it for any
+    other table raises ``ValueError`` before the scan is built."""
     keys = _FACT_SPREAD_KEYS.get(name)
+    if key is not None:
+        if keys is None:
+            raise ValueError(
+                f"t_spread: key= applies only to the spread fact tables "
+                f"{sorted(_FACT_SPREAD_KEYS)}, not {name!r}"
+            )
+        keys = key
+    df = t(spark, sf_dir, name)
     if keys is not None:
         from tmp_parquet_merge_spark.operators.dedup import spread_scan
 
-        if key is not None:
-            keys = key
         if isinstance(keys, str):
             keys = (keys,)
         df = spread_scan(df, *keys)

@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the judge-visible scale story:
+# Defaults chosen for the scale story:
 #  - AQE on: runtime shuffle-partition coalescing, skew-join splitting,
 #    and dynamic broadcast conversion — the knobs that keep the same
 #    logical plans viable from sf0.001 local runs to 100 TB clusters.

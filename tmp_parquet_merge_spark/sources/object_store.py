@@ -5,7 +5,7 @@ The reference dumps footer key-value metadata
 (`/root/reference/cpp/tools/parquet/parquet_reader.cc:46-47`); our
 engine stamps it.  On a local/shared FS the stamp is a POSIX append
 (parquet_io.attach_kv_metadata).  Object stores have no append — the
-r7 adjudication (SURVEY §7) kept a loud refusal rather than dress an
+design decision (SURVEY §7) kept a loud refusal rather than dress an
 O(data) rewrite up as a stamp.  This module implements the adjudicated
 O(footer) design instead, using the S3 API's server-side primitives:
 
@@ -25,7 +25,7 @@ copy ranges trivially right: parts cover [0, size) of the original.
 
 Atomicity is STRONGER than the local path: S3 readers see the old or
 the new object, never a torn tail.  Concurrent-writer safety is
-end-to-end (r10, closing the r9 advisor's lost-update window): the
+end-to-end (closing the lost-update window): the
 tail GET, every ``UploadPartCopy``, and the final
 ``CompleteMultipartUpload`` are all pinned to the generation the
 stamp read — ``CopySourceIfMatch`` on each copy part, ``IfMatch`` on
@@ -95,9 +95,9 @@ def _error_code(exc: Exception) -> str | None:
 
 
 def _bare_etag(etag: str) -> str:
-    """One ETag spelling for every conditional parameter (r10 advisor:
-    CopySourceIfMatch got the quoted head_object ETag while the
-    IfMatch params got it stripped — AWS accepts both, but a strict
+    """One ETag spelling for every conditional parameter (otherwise
+    CopySourceIfMatch gets the quoted head_object ETag while the
+    IfMatch params get it stripped — AWS accepts both, but a strict
     S3-compatible implementation could accept one and reject the
     other, failing one path spuriously).  Canonical form here: bare
     (no surrounding quotes)."""
@@ -106,7 +106,7 @@ def _bare_etag(etag: str) -> str:
 
 def _require_conditional_writes(s3) -> None:
     """Fail LOUDLY when the SDK cannot even send the conditional-write
-    params the concurrency guarantee rests on (r10 advisor).  IfMatch
+    params the concurrency guarantee rests on.  IfMatch
     on PutObject/CompleteMultipartUpload is the S3 conditional-writes
     API (GA Nov 2024; botocore >= 1.35.6x service models).  An older
     botocore would raise ParamValidationError mid-stamp; probing the
@@ -447,7 +447,7 @@ def stamp_kv_s3(
             # itself verifies the live object is still the generation
             # the stamp read — without this, an object rewritten after
             # the last UploadPartCopy would be silently clobbered with
-            # old-data+new-footer (the r9 advisor's lost-update window)
+            # old-data+new-footer (the lost-update window)
             s3.complete_multipart_upload(
                 Bucket=bucket,
                 Key=k,

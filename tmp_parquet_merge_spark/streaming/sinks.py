@@ -52,9 +52,8 @@ def latest_per_user(events: DataFrame) -> DataFrame:
     winning event_id is PART of the profile (last_event_id): the merge
     tie-break needs the real id, so a later micro-batch carrying a
     LOWER event_id at the same ts loses to the stored row exactly as
-    it would in one batch pass (r5 advisor: the old -1/0 surrogate
-    made the later batch always win ts ties, diverging stream from
-    batch)."""
+    it would in one batch pass (a -1/0 surrogate would make the later
+    batch always win ts ties, diverging stream from batch)."""
     w = Window.partitionBy("user_id").orderBy(
         F.desc("ts"), F.desc("event_id")
     )

@@ -24,15 +24,15 @@ def norm_cell(v):
     if isinstance(v, float):
         if math.isnan(v):
             return "NaN"
-        # NO -0.0 masking: the round driver hashes '-0.0' != '0.0', so a
+        # NO -0.0 masking: the correctness driver hashes '-0.0' != '0.0', so a
         # local gate that unifies them hides real driver failures (it hid
-        # q_column_stats' footer -0.0 in r8). Queries must canonicalize
+        # q_column_stats' footer -0.0). Queries must canonicalize
         # signed zero themselves (add F.lit(0.0) to the expression).
         #
         # Integral floats keep a '.0' marker so they do NOT collapse onto
         # ints: the driver hashes pandas float64 12345.0 apart from int64
-        # 12345 (r11 q_tokenizer_fertility/q_shard_balance shipped through
-        # the old shared '%.10g' spelling and hash-FAILED). Float-vs-float
+        # 12345 (q_tokenizer_fertility/q_shard_balance hash-FAILED through
+        # a shared '%.10g' spelling). Float-vs-float
         # comparisons are unaffected — both sides get the marker.
         s = f"{v:.10g}"
         if "." not in s and "e" not in s and "inf" not in s:

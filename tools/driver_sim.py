@@ -1,21 +1,20 @@
-"""Driver-faithful pre-flight for the correctness window.
+"""Driver-faithful correctness pre-flight.
 
-The per-round driver (CORRECTNESS_r0N.json) collects each registered
+The correctness driver collects each registered
 query on Spark AND its DuckDB oracle into pandas, canonicalizes both
 with a column-name sort followed by ``sort_values`` over ALL columns,
 and hashes the values.  That pandas sort path crashes on unhashable
 cells (``Categorical`` -> ``factorize`` -> ``TypeError: unhashable
-type: 'list'``) — the exact failure that turned q_agg_collect (r2) and
-q_multimodal_features (r3) into ERR rows even though the local
+type: 'list'``) — the exact failure that turned q_agg_collect and
+q_multimodal_features into ERR rows even though the local
 normalizer in tools/check_oracle.py handled lists fine.
 
 This tool replicates the driver's canonicalization verbatim so list/
-dict/ndarray cells crash HERE, at sf0.01 on the dev box, not in the
-round's one driver run.  Usage:
+dict/ndarray cells crash HERE, at sf0.01, not in the driver run.  Usage:
 
     python tools/driver_sim.py [sf_dir] [--first N] [query ...]
 
-Default: the first 50 registry entries (the driver's window) at sf0.01.
+Default: the first 50 registry entries, in definition order, at sf0.01.
 """
 
 from __future__ import annotations
@@ -55,8 +54,8 @@ def _norm(v):
         if math.isnan(v):
             return "NaN"
         # NO -0.0 normalization: the real driver hashes '-0.0' != '0.0'
-        # (q_column_stats hash-failed in r8 while this preflight passed
-        # because it used to mask signed zero). Queries must canonicalize
+        # (q_column_stats hash-failed while a preflight that masked
+        # signed zero passed). Queries must canonicalize
         # signed zero themselves; the gate must match the driver.
         return f"{v:.6g}"
     if hasattr(v, "isoformat"):
@@ -72,7 +71,7 @@ def _frame_key(df: pd.DataFrame) -> list[tuple]:
 
 def _hashes_apart(a, b) -> bool:
     """Would this dtype pair hash apart in the driver?  Same values but
-    a float-vs-integer dtype mix DOES: r11 shipped
+    a float-vs-integer dtype mix DOES: a build shipped
     q_tokenizer_fertility / q_shard_balance with a bare SUM(BIGINT)
     oracle column (DuckDB HUGEINT -> pandas float64) and both
     hash-FAILED while this gate only warned.  Width-only integer mixes

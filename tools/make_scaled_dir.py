@@ -16,10 +16,9 @@ not manufacture degenerate duplicate blowups:
   * embeddings.embedding is cyclically rotated per replica (unit norm
     preserved, direction decorrelated).
 
-Prints the output dir on stdout.  Used by the round-6 scale-trend
-sweep: ``python bench.py $(python tools/make_scaled_dir.py)`` runs
-the full headline registry at 5× the driver's bench scale (sf0.5
-equivalent).
+Prints the output dir on stdout, so a scaled run is e.g.
+``python tools/check_oracle.py $(python tools/make_scaled_dir.py)``
+(every registered query at 5× sf0.1, sf0.5 equivalent).
 """
 
 from __future__ import annotations
