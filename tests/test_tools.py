@@ -237,3 +237,42 @@ def test_interval_us_rejects_unknown_units():
     ):
         with _pytest.raises(ValueError, match="unsupported watermark interval"):
             _interval_us(bad)
+
+
+def _unreferenced_package_defs(repo: Path) -> list[str]:
+    """Undecorated top-level ``def``s of the package whose name appears
+    as a whole word nowhere in the repo's package, tests, tools or
+    perfbench ``.py`` files outside the function's own definition.
+    Decorated defs are skipped: ``@query`` builders are reached
+    through ``REGISTRY``, not by name."""
+    import ast
+    import re
+
+    texts = {
+        p: p.read_text()
+        for d in ("tmp_parquet_merge_spark", "tests", "tools", "perfbench")
+        for p in (repo / d).rglob("*.py")
+    }
+    dead = []
+    for path, text in texts.items():
+        if not path.is_relative_to(repo / "tmp_parquet_merge_spark"):
+            continue
+        lines = text.splitlines()
+        for node in ast.parse(text).body:
+            if not isinstance(node, ast.FunctionDef) or node.decorator_list:
+                continue
+            word = re.compile(rf"\b{re.escape(node.name)}\b")
+            outside = "\n".join(
+                lines[: node.lineno - 1] + lines[node.end_lineno:]
+            )
+            if not word.search(outside) and not any(
+                word.search(t) for p, t in texts.items() if p != path
+            ):
+                dead.append(f"{path.relative_to(repo)}:{node.name}")
+    return sorted(dead)
+
+
+def test_no_unreferenced_package_defs():
+    """Dead-code guard: a package helper nobody calls is deleted, not
+    kept "for later"."""
+    assert _unreferenced_package_defs(Path(__file__).resolve().parents[1]) == []

@@ -18,6 +18,20 @@ columns, text analysis").  All Spark-first, designed for 100 TB:
                         token hashes, computed entirely JVM-side (one
                         explode + one groupBy; no Python).
 
+The shingle-set operators share one boundary between candidate
+generation and scoring: the pair-counts relation
+``(doc_a, doc_b, n_inter, n_a, n_b)``.  Candidate generators produce it
+— the all-pairs shared-shingle join (:func:`_shingle_pair_counts`), or
+MinHash band keys (:func:`_minhash_bands` → :func:`_band_candidates`)
+and the rare-shingle index, each verified by :func:`_set_counts` over
+:func:`_shingle_sets` — and scorers read it: :func:`_jaccard_pairs` and
+:func:`_containment_pairs` hold the only spelling of each formula.
+The Hamming-space operators (SimHash here, perceptual media hashes in
+``multimodal``) share the multi-index core beside
+``multimodal._ball_masks``: :func:`multimodal._mih_ball` sizes and
+enumerates the probe ball, :func:`multimodal._mih_pairs` runs the
+probe join and the exact ``bit_count`` verify.
+
 Everything below stays in built-in pyspark.sql.functions (whole-stage
 codegen); there are no Python UDFs in any hot path.
 """
@@ -28,9 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def spread_scan(
-    df: DataFrame, *keys: str, target: int | None = None
-) -> DataFrame:
+def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     """Conditionally repartition a scan whose split count is below the
     cluster's default parallelism (guide §2.5
     "input skew — one huge unsplittable file: repartition immediately
@@ -56,12 +68,6 @@ def spread_scan(
     site is, and oracle parity at all bundled tiers plus the
     local[5]-vs-local[32] probe pin it.
 
-    ``target``: override the partition floor.  Consumers whose results
-    are FLOAT-sum layout-sensitive (k-means centroid updates) must
-    pass a FIXED number so the partial-aggregation layout — and hence
-    the last-ulp of every sum — is identical at any core count;
-    layout-invariant consumers leave it None (cores-derived floor).
-
     Probe cost: the
     precise split count needs a driver-side plan→RDD conversion
     (``df.rdd``) — one extra physical-planning pass per query build.
@@ -76,9 +82,7 @@ def spread_scan(
     if getattr(df, "_tpms_spread_checked", False):
         return df
     spark = df.sparkSession
-    sc = spark.sparkContext
-    if target is None:
-        target = int(sc.defaultParallelism)
+    target = int(spark.sparkContext.defaultParallelism)
     try:
         mpb = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
         oc = _parse_bytes(spark.conf.get("spark.sql.files.openCostInBytes"))
@@ -625,8 +629,9 @@ def _sized_shingles(
 
 
 def _shingle_pair_counts(shn: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, n_inter, n_a, n_b) for pairs sharing ≥1 shingle
-    — the shared core of the Jaccard and containment verify twins."""
+    """Pair counts ``(doc_a, doc_b, n_inter, n_a, n_b)`` for all pairs
+    sharing ≥1 shingle — the all-pairs candidate generator of the exact
+    Jaccard and containment verify twins."""
     a = shn.select(
         F.col("doc").alias("doc_a"), "s", F.col("n_sh").alias("n_a")
     )
@@ -645,6 +650,33 @@ def _shingle_pair_counts(shn: DataFrame) -> DataFrame:
     )
 
 
+def _jaccard_pairs(counts: DataFrame, t: float) -> DataFrame:
+    """Pair counts → ``(doc_a, doc_b, jaccard)`` with jaccard ≥ ``t``.
+    Jaccard = |A∩B| / (|A|+|B|-|A∩B|): the union is never built, one
+    double division at the end, rounded to 6 places for cross-engine
+    determinism."""
+    jac = F.round(
+        F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
+        6,
+    )
+    return counts.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= t
+    )
+
+
+def _containment_pairs(counts: DataFrame, t: float) -> DataFrame:
+    """Pair counts → ``(doc_a, doc_b, cont_ab, cont_ba)`` where either
+    direction of C(A→B) = |A∩B| / |A| reaches ``t`` (rounded to 6
+    places)."""
+    cont = counts.select(
+        "doc_a",
+        "doc_b",
+        F.round(F.col("n_inter") / F.col("n_a"), 6).alias("cont_ab"),
+        F.round(F.col("n_inter") / F.col("n_b"), 6).alias("cont_ba"),
+    )
+    return cont.filter((F.col("cont_ab") >= t) | (F.col("cont_ba") >= t))
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -661,57 +693,66 @@ def ngram_jaccard_pairs(
     (ordinary shuffled hash join Catalyst handles; hot shingles are the
     skew risk, mitigated by AQE skew-join and by the upstream
     MinHash-LSH candidate cut at real scale — this operator is the
-    exact *verify* stage, not the candidate generator).
-    Jaccard = |A∩B| / (|A|+|B|-|A∩B|); one double division at the end,
-    rounded to 6 places for cross-engine determinism.
+    exact *verify* stage, not the candidate generator) → the shared
+    :func:`_jaccard_pairs` scorer.
     """
-    inter = _shingle_pair_counts(_sized_shingles(df, text_col, id_col, n=n))
-    jac = inter.select(
-        "doc_a",
-        "doc_b",
-        F.round(
-            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
-        ).alias("jaccard"),
-    )
-    return jac.filter(F.col("jaccard") >= threshold)
+    counts = _shingle_pair_counts(_sized_shingles(df, text_col, id_col, n=n))
+    return _jaccard_pairs(counts, threshold)
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    num_perm: int = 64,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """MinHash signatures as (doc, sig array<int>) — permutation i is
-    murmur3 with the lane index mixed into the input
-    (``F.hash(shingle, lit(i))``); the min over shingles estimates
-    h_min of permutation i.
+def _minhash_rows(num_perm: int, bands: int) -> int:
+    """Lanes per LSH band, refusing a band count that does not divide
+    ``num_perm``.  Callers run it before touching any DataFrame.
 
-    Shaped as explode → hash-agg (NOT an array ``transform`` lambda):
-    projections and min-aggregates run under whole-stage codegen,
-    whereas higher-order-function lambdas are interpreted per element
-    — measured ~20× slower at sf0.1.  One shuffle keyed by doc id with
-    map-side partial mins."""
-    sh = shingle_rows(df, text_col, id_col, n=shingle_n)
-    return _signatures_from_shingle_rows(sh, num_perm)
+    A silent floor-division would drop signature lanes (shifting the
+    S-curve threshold), and bands > num_perm makes rows = 0: every
+    band key hashes an EMPTY slice, all documents collide, and the
+    "candidate" set is the full O(n²) cross product."""
+    if bands < 1 or num_perm % bands != 0:
+        raise ValueError(
+            f"bands must evenly divide num_perm: num_perm={num_perm}, "
+            f"bands={bands}"
+        )
+    return num_perm // bands
 
 
-def _signatures_from_shingle_rows(sh: DataFrame, num_perm: int) -> DataFrame:
-    # one O(len) string hash per shingle, then num_perm murmur3 mixes
-    # of the 8-byte digest — vs hashing the string once PER LANE
-    # (num_perm × O(len) per shingle, the dominant signature cost on
-    # long shingles).  Cross-lane collisions require an xxhash64
-    # collision (~2^-64 per shingle pair): the standard one-hash
-    # k-derive MinHash construction.
+def _minhash_bands(sh: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """Shingle rows ``(doc, s)`` → banded MinHash keys
+    ``(doc, band, key)``.
+
+    Permutation i is murmur3 with the lane index mixed into an 8-byte
+    xxhash64 digest of the shingle (``F.hash(xxhash64(s), lit(i))``);
+    the min over a doc's shingles estimates h_min of permutation i.
+    One O(len) string hash per shingle, then ``num_perm`` murmur3
+    mixes — vs hashing the string once PER LANE (num_perm × O(len),
+    the dominant signature cost on long shingles).  Cross-lane
+    collisions require an xxhash64 collision (~2^-64 per shingle pair):
+    the standard one-hash k-derive MinHash construction.  Shaped as
+    explode → hash-agg (NOT an array ``transform`` lambda): projections
+    and min-aggregates run under whole-stage codegen, whereas
+    higher-order-function lambdas are interpreted per element —
+    measured ~20× slower at sf0.1.
+
+    The signature relation is checkpointed: it feeds both sides of a
+    band join, and alias boundaries defeat ReuseExchange, so without
+    it the ``num_perm``-min aggregate runs twice.  It holds one
+    doc-keyed row per document, tiny to hold."""
+    rows = _minhash_rows(num_perm, bands)
     h = sh.select("doc", F.xxhash64("s").alias("h"))
-    agg = h.groupBy("doc").agg(
-        *[F.min(F.hash("h", F.lit(i))).alias(f"h{i}") for i in range(num_perm)]
+    sigs = (
+        h.groupBy("doc")
+        .agg(
+            *[
+                F.min(F.hash("h", F.lit(i))).alias(f"h{i}")
+                for i in range(num_perm)
+            ]
+        )
+        .select("doc", F.array(*[f"h{i}" for i in range(num_perm)]).alias("sig"))
+        .localCheckpoint(eager=False)
     )
-    return agg.select(
-        "doc", F.array(*[f"h{i}" for i in range(num_perm)]).alias("sig")
-    )
+    return sigs.select(
+        "doc", F.explode(lsh_band_keys(F.col("sig"), bands, rows)).alias("bk")
+    ).select("doc", "bk.band", "bk.key")
 
 
 def lsh_band_keys(sig: Column, bands: int, rows: int) -> Column:
@@ -726,6 +767,55 @@ def lsh_band_keys(sig: Column, bands: int, rows: int) -> Column:
             )
             for b in range(bands)
         ]
+    )
+
+
+def _band_candidates(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)`` pairs sharing a (band, key) bucket
+    between two :func:`_minhash_bands` relations.  A self-join caller
+    adds ``doc_a < doc_b``."""
+    a = a.select(F.col("doc").alias("doc_a"), "band", "key")
+    b = b.select(F.col("doc").alias("doc_b"), "band", "key")
+    return a.join(b, ["band", "key"]).select("doc_a", "doc_b").distinct()
+
+
+def _shingle_sets(sh: DataFrame) -> DataFrame:
+    """Per-doc shingle sets ``(doc, sh)``, checkpointed: the verify
+    joins them in twice (doc_a and doc_b), and across that alias
+    boundary ReuseExchange does not fire, so without the checkpoint
+    the ``collect_set`` aggregate runs once per side."""
+    return (
+        sh.groupBy("doc")
+        .agg(F.collect_set("s").alias("sh"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def _set_counts(
+    cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame
+) -> DataFrame:
+    """Candidate pairs ``(doc_a, doc_b)`` → pair counts
+    ``(doc_a, doc_b, n_inter, n_a, n_b)`` from :func:`_shingle_sets`
+    relations.  Only candidates are verified (an all-pairs join here
+    would defeat the candidate cut), and the O(|set|)
+    ``array_intersect`` runs ONCE per candidate: with the score as a
+    live expression, filter pushdown re-inlines it into both the
+    threshold filter and the output projection (the editdist
+    double-levenshtein class), so the counts materialize behind a
+    checkpoint and the scorer reads columns."""
+    sa = sets_a.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
+    sb = sets_b.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
+    return (
+        cand.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("n_inter"),
+            F.size("sh_a").alias("n_a"),
+            F.size("sh_b").alias("n_b"),
+        )
+        .localCheckpoint(eager=False)
     )
 
 
@@ -750,16 +840,7 @@ def minhash_dedup_pairs(
     plate) are the skew risk — AQE skew-join splits them, and the
     verify join is on doc ids, which are uniform.
     """
-    if bands < 1 or num_perm % bands != 0:
-        # a silent floor-division would drop signature lanes (shifting
-        # the S-curve threshold), and bands > num_perm makes rows = 0:
-        # every band key hashes an EMPTY slice, all documents collide,
-        # and the "candidate" set is the full O(n²) cross product
-        raise ValueError(
-            f"bands must evenly divide num_perm: num_perm={num_perm}, "
-            f"bands={bands}"
-        )
-    rows = num_perm // bands
+    _minhash_rows(num_perm, bands)
     # the shingle pipeline (explode → window → distinct) feeds BOTH the
     # signature stage and the verify stage; Catalyst does not fuse the
     # two subplans, so materialize it once (local checkpoint, bounded
@@ -770,71 +851,14 @@ def minhash_dedup_pairs(
     sh = shingle_rows(df, text_col, id_col, n=shingle_n)
     if verify_threshold is not None:
         sh = sh.localCheckpoint(eager=False)
-    # the signature relation feeds BOTH sides of the band self-join;
-    # without its own checkpoint the 64-min aggregate runs twice
-    # (alias boundaries defeat ReuseExchange, same as the shingle
-    # pipeline above) — one doc-keyed row per document, tiny to hold
-    sigs = _signatures_from_shingle_rows(sh, num_perm).localCheckpoint(
-        eager=False
-    )
-    banded = sigs.select(
-        "doc", F.explode(lsh_band_keys(F.col("sig"), bands, rows)).alias("bk")
-    ).select("doc", "bk.band", "bk.key")
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
+    banded = _minhash_bands(sh, num_perm, bands)
+    cand = _band_candidates(banded, banded).filter(
+        F.col("doc_a") < F.col("doc_b")
     )
     if verify_threshold is None:
         return cand
-    # Verify ONLY the candidates: join their shingle sets back and
-    # compute exact Jaccard per pair.  (Running the full all-pairs
-    # ngram join here would defeat the entire point of LSH.)
-    # same double-derivation on the verify side: the per-doc shingle
-    # sets join in twice (doc_a and doc_b)
-    sets_ = (
-        sh.groupBy("doc")
-        .agg(F.collect_set("s").alias("sh"))
-        .localCheckpoint(eager=False)
-    )
-    sa = sets_.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets_.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
-    # two costs engineered out of the verify: the union array is
-    # never materialized (|A∪B| = |A|+|B|−|A∩B| from per-set sizes),
-    # and the O(|set|) array_intersect runs ONCE per candidate — with
-    # jaccard as a live expression, filter pushdown re-inlines it into
-    # both the threshold filter and the output projection (the
-    # editdist double-levenshtein class), so the sized counts
-    # materialize behind a checkpoint and the filter reads
-    # columns
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    scored = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            inter.alias("n_inter"),
-            F.size("sh_a").alias("n_a"),
-            F.size("sh_b").alias("n_b"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    jac = F.round(
-        F.col("n_inter")
-        / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        6,
-    )
-    return (
-        scored.select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= verify_threshold)
-    )
+    sets_ = _shingle_sets(sh)
+    return _jaccard_pairs(_set_counts(cand, sets_, sets_), verify_threshold)
 
 
 def dedup_clusters(
@@ -1062,12 +1086,16 @@ def simhash_dedup_pairs(
     join; fewer-probes-more-candidates loses once n clears a few
     thousand.
 
-    The probe-side explode (bands·|ball| keys/item) must not shuffle:
-    the index relation (bands ints/item) broadcasts under the same
-    size gate as multimodal.media_neardup_pairs; above the gate the
-    join falls back to shuffle where MIH still wins once n²
-    dominates."""
-    import math as _math
+    The band values ride as an array column into the shared
+    multi-index core (``multimodal._mih_ball`` / ``_mih_pairs``, also
+    behind multimodal.media_neardup_pairs), whose probe-side explode
+    never shuffles: the index relation broadcasts under a size gate,
+    above which the join falls back to shuffle where MIH still wins
+    once n² dominates."""
+    from tmp_parquet_merge_spark.operators.multimodal import (
+        _mih_ball,
+        _mih_pairs,
+    )
 
     # bands=1 (width 64) is rejected even though it divides 64: its
     # key mask 2^64-1 and any ball mask with bit 63 set exceed Spark's
@@ -1079,76 +1107,20 @@ def simhash_dedup_pairs(
             f"<= 32 so key masks fit a signed 64-bit literal): got {bands}"
         )
     width = 64 // bands
-    f = max_hamming // bands
-    ball_n = sum(_math.comb(width, j) for j in range(f + 1))
-    if ball_n * bands > 20_000:
-        raise ValueError(
-            f"max_hamming={max_hamming}: probe ball of {ball_n * bands} "
-            "masks per item — use a tighter radius"
-        )
-    from tmp_parquet_merge_spark.operators.multimodal import _ball_masks
-
-    masks = _ball_masks(width, f)
+    ball = _mih_ball([width] * bands, max_hamming)
     key_mask = (1 << width) - 1
-    sigs = simhash(df, text_col, id_col).localCheckpoint(eager=False)
-    n_items = sigs.count()
-    small_index = n_items * bands <= 8_000_000
-    chunks = sigs.select(
+    sigs = simhash(df, text_col, id_col).select(
         "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("simhash", i * width)
-                        .bitwiseAND(F.lit(key_mask))
-                        .alias("key"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "bk.band", "bk.key")
-    probes = (
-        chunks.select(
-            "doc",
-            "band",
-            "key",
-            F.explode(F.lit(masks)).alias("m"),
-        ).select("doc", "band", F.expr("key ^ m").alias("key"))
-        if f > 0
-        else chunks
+        "simhash",
+        F.array(
+            *[
+                F.shiftright("simhash", i * width).bitwiseAND(F.lit(key_mask))
+                for i in range(bands)
+            ]
+        ).alias("bands"),
     )
-    idx = F.broadcast(chunks.alias("b")) if small_index else chunks.alias("b")
-    cand = (
-        probes.alias("a")
-        .join(
-            idx,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-        )
-    )
-    sa = sigs.select(F.col("doc").alias("doc_a"), F.col("simhash").alias("__sa"))
-    sb = sigs.select(F.col("doc").alias("doc_b"), F.col("simhash").alias("__sb"))
-    if small_index:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb"))).alias(
-                "hamming"
-            ),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    return _mih_pairs(
+        sigs, "doc", ball, ["simhash"], max_hamming, ("doc_a", "doc_b")
     )
 
 
@@ -1168,19 +1140,12 @@ def ngram_containment_pairs(
     (union is huge) but containment ≈ 1 from the small side — the
     C4/RefinedWeb-style "document inclusion" dedup signal.  Same plan
     economics as :func:`ngram_jaccard_pairs` (shared
-    :func:`_shingle_pair_counts` core; the exact verify stage,
-    candidate-cut upstream at real scale).
+    :func:`_shingle_pair_counts` candidates, :func:`_containment_pairs`
+    scorer; the exact verify stage, candidate-cut upstream at real
+    scale).
     """
-    inter = _shingle_pair_counts(_sized_shingles(df, text_col, id_col, n=n))
-    cont = inter.select(
-        "doc_a",
-        "doc_b",
-        F.round(F.col("n_inter") / F.col("n_a"), 6).alias("cont_ab"),
-        F.round(F.col("n_inter") / F.col("n_b"), 6).alias("cont_ba"),
-    )
-    return cont.filter(
-        (F.col("cont_ab") >= threshold) | (F.col("cont_ba") >= threshold)
-    )
+    counts = _shingle_pair_counts(_sized_shingles(df, text_col, id_col, n=n))
+    return _containment_pairs(counts, threshold)
 
 
 def _doc_segments(
@@ -1338,60 +1303,22 @@ def novelty_neardup(
     against the verified-duplicate ids.  Shuffles carry (band, key,
     id) triples and shingle digests; bodies never move.  Returns the
     NOVEL new-batch rows (id only — callers re-join attributes)."""
-    if bands < 1 or num_perm % bands != 0:
-        # same guard as minhash_dedup_pairs: a silent floor-division
-        # would drop signature lanes (shifting the S-curve threshold),
-        # and bands > num_perm hashes EMPTY slices — every doc collides
-        raise ValueError(
-            f"bands must evenly divide num_perm: num_perm={num_perm}, "
-            f"bands={bands}"
-        )
-
-    def side(df):
-        sh = shingle_rows(df, text_col, id_col, n=shingle_n)
-        sh = sh.localCheckpoint(eager=False)
-        sigs = _signatures_from_shingle_rows(sh, num_perm).localCheckpoint(
+    _minhash_rows(num_perm, bands)
+    # each side's shingle rows feed both its signatures and its sets
+    sh_n, sh_o = (
+        shingle_rows(d, text_col, id_col, n=shingle_n).localCheckpoint(
             eager=False
         )
-        banded = sigs.select(
-            "doc",
-            F.explode(
-                lsh_band_keys(F.col("sig"), bands, num_perm // bands)
-            ).alias("bk"),
-        ).select("doc", "bk.band", "bk.key")
-        sets_ = (
-            sh.groupBy("doc")
-            .agg(F.collect_set("s").alias("sh"))
-            .localCheckpoint(eager=False)
-        )
-        return banded, sets_
-
-    banded_n, sets_n = side(new_df)
-    banded_o, sets_o = side(old_df)
-    cand = (
-        banded_n.alias("a")
-        .join(
-            banded_o.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_new"), F.col("b.doc").alias("doc_old")
-        )
-        .distinct()
+        for d in (new_df, old_df)
     )
-    sa = sets_n.select(F.col("doc").alias("doc_new"), F.col("sh").alias("sh_a"))
-    sb = sets_o.select(F.col("doc").alias("doc_old"), F.col("sh").alias("sh_b"))
-    jac = F.round(
-        F.size(F.array_intersect("sh_a", "sh_b"))
-        / F.size(F.array_union("sh_a", "sh_b")),
-        6,
+    cand = _band_candidates(
+        _minhash_bands(sh_n, num_perm, bands),
+        _minhash_bands(sh_o, num_perm, bands),
     )
+    counts = _set_counts(cand, _shingle_sets(sh_n), _shingle_sets(sh_o))
     dup_new = (
-        cand.join(sa, "doc_new")
-        .join(sb, "doc_old")
-        .filter(jac >= F.lit(threshold))
-        .select(F.col("doc_new").alias(id_col))
+        _jaccard_pairs(counts, threshold)
+        .select(F.col("doc_a").alias(id_col))
         .distinct()
     )
     return new_df.select(F.col(id_col)).join(dup_new, id_col, "left_anti")
@@ -1541,7 +1468,10 @@ def containment_pairs_rare_shingle(
 
     Verify stage: exact containment on candidate ids only — the two
     shingle SETS move for candidate docs alone (the editdist-LSH
-    candidates pattern), never a corpus-wide pair join."""
+    candidates pattern), never a corpus-wide pair join; the sets, the
+    pair counts and the scorer are the MinHash verify's
+    (:func:`_shingle_sets`, :func:`_set_counts`,
+    :func:`_containment_pairs`)."""
     from pyspark.sql import Window
 
     sh = shingle_rows(df, text_col, id_col, n=n).localCheckpoint(
@@ -1595,31 +1525,5 @@ def containment_pairs_rare_shingle(
         .union(cand.select(F.col("doc_b").alias("doc")))
         .distinct()
     )
-    sets_ = (
-        sh.join(cand_ids, "doc", "left_semi")
-        .groupBy("doc")
-        .agg(F.collect_set("s").alias("sh"))
-    )
-    sa = sets_.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets_.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
-    scored = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size("sh_a"),
-                6,
-            ).alias("cont_ab"),
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size("sh_b"),
-                6,
-            ).alias("cont_ba"),
-        )
-    )
-    return scored.filter(
-        (F.col("cont_ab") >= threshold) | (F.col("cont_ba") >= threshold)
-    )
+    sets_ = _shingle_sets(sh.join(cand_ids, "doc", "left_semi"))
+    return _containment_pairs(_set_counts(cand, sets_, sets_), threshold)

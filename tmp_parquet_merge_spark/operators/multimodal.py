@@ -97,20 +97,6 @@ def decode_image(payload: bytes) -> object:
     return Image.open(io.BytesIO(payload))
 
 
-def _fake_features(payload: bytes, bins: int = 16) -> list[float]:
-    """Deterministic stand-in for a decoded-image feature vector: a
-    normalized byte histogram (vectorized — a per-byte Python loop
-    would make the featurizer the pipeline bottleneck).  Replace with
-    (decode → resize → model) without touching the Spark plumbing."""
-    import numpy as np
-
-    if not payload:
-        return [0.0] * bins
-    a = np.frombuffer(payload, dtype=np.uint8).astype(np.int32)
-    hist = np.bincount(a * bins // 256, minlength=bins)
-    return (hist / len(payload)).tolist()
-
-
 def extract_features(media: DataFrame, *, bins: int = 16) -> DataFrame:
     """Arrow-batched feature extraction over the payload column.
 
@@ -290,6 +276,114 @@ def _ball_masks(width: int, f: int) -> list[int]:
     return masks
 
 
+def _mih_ball(widths: list[int], radius: int) -> list[list[int]]:
+    """Per-band probe balls of a multi-index Hamming search: for bands
+    of ``widths`` bits and total radius ``radius``, every XOR mask of
+    popcount ≤ ⌊radius/bands⌋ over each band (generalized pigeonhole:
+    a total distance ≤ radius leaves ≤ ⌊radius/bands⌋ errors in some
+    band).  The ball is sized ANALYTICALLY before it is enumerated —
+    1 band of 64 bits at radius 10 would ask for C(64, ≤10) ≈ 1.5e11
+    masks and hang inside the generator if the guard came after."""
+    import math
+
+    f = radius // len(widths)
+    n_masks = sum(math.comb(w, k) for w in widths for k in range(f + 1))
+    if n_masks > 20_000:
+        raise ValueError(
+            f"bands={len(widths)}, radius={radius}: probe ball of "
+            f"{n_masks} masks per item — use more bands or a tighter radius"
+        )
+    return [_ball_masks(w, f) for w in widths]
+
+
+def _mih_pairs(
+    sigs: DataFrame,
+    id_col: str,
+    ball: list[list[int]],
+    sig_cols: list[str],
+    radius: int,
+    out_names: tuple[str, str],
+) -> DataFrame:
+    """Multi-index Hamming join (Norouzi, Punjani & Fleet, CVPR 2012):
+    ``sigs`` carries one row per item with its band values as the
+    array column ``bands`` and the full signature as the long columns
+    ``sig_cols``.  Each item indexes ONE key per band and probes the
+    :func:`_mih_ball` around its own band values; every candidate is
+    verified exactly (distance = Σ ``bit_count(xor)`` over
+    ``sig_cols``) and pairs within ``radius`` come back as
+    ``(out_a, out_b, hamming)`` with out_a < out_b.
+
+    The signature relation is checkpointed and counted: the count
+    writes the checkpoint blocks and picks the join regime without a
+    second upstream scan.  The probe-side explode (bands·|ball|
+    keys/item) must not shuffle; when the index relation (bands ints
+    per item) fits a broadcast, ship IT and stream the probe side
+    map-side.  Above the broadcast budget the join falls back to
+    shuffle, where MIH still wins once n² dominates (candidate volume
+    scales n², probe volume n).
+
+    Candidates are NOT deduped before the verify: a pair within the
+    ball in k bands is verified k times and deduped AFTER the Hamming
+    filter, when only surviving pairs remain (measured A/B: pre-verify
+    distinct cost 3.4 s of 7.9 s at sf0.1 on media)."""
+    out_a, out_b = out_names
+    sigs = sigs.localCheckpoint(eager=False)
+    small_index = sigs.count() * len(ball) <= 8_000_000
+    keys = sigs.select(
+        F.col(id_col), F.posexplode("bands").alias("band", "bval")
+    )
+    # probe side: every key within the ball of the item's band value,
+    # enumerated as literal XOR masks (JVM-side explode + int xor — no
+    # Python).  ONE nested-list lit, not per-element F.lit()s — a
+    # 16-bit radius-2 ball is 137 masks/band and each F.lit is a py4j
+    # round-trip, so element-wise construction costs thousands of
+    # driver calls before the plan even exists.
+    probes = keys.select(
+        F.col(id_col),
+        "band",
+        "bval",
+        F.explode(F.element_at(F.lit(ball), F.col("band") + 1)).alias("m"),
+    ).select(
+        F.col(id_col),
+        "band",
+        F.expr("bval ^ m").alias("bval"),
+    ) if len(ball[0]) > 1 else keys
+    cand = (
+        probes.alias("a")
+        .join(
+            F.broadcast(keys.alias("b")) if small_index else keys.alias("b"),
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bval") == F.col("b.bval"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias(out_a),
+            F.col(f"b.{id_col}").alias(out_b),
+        )
+    )
+    sa, sb = (
+        sigs.select(
+            F.col(id_col).alias(out), *[F.col(c).alias(c + sfx) for c in sig_cols]
+        )
+        for out, sfx in ((out_a, "_a"), (out_b, "_b"))
+    )
+    if small_index:
+        # the verify joins feed the CANDIDATE relation (the big side)
+        # against the signature table — same regime
+        sa, sb = F.broadcast(sa), F.broadcast(sb)
+    dist = [
+        F.bit_count(F.col(f"{c}_a").bitwiseXOR(F.col(f"{c}_b")))
+        for c in sig_cols
+    ]
+    return (
+        cand.join(sa, out_a)
+        .join(sb, out_b)
+        .select(out_a, out_b, sum(dist[1:], dist[0]).alias("hamming"))
+        .filter(F.col("hamming") <= radius)
+        .distinct()
+    )
+
+
 def media_neardup_pairs(
     media: DataFrame,
     *,
@@ -320,108 +414,25 @@ def media_neardup_pairs(
     The probe explode must NOT be shuffled: 548 rows/item through an
     exchange costs more than the candidate savings (measured A/B:
     shuffled MIH 40 s vs the f=0 spelling's 28 s at the 25× replica;
-    broadcast-index MIH 4.5 s).  When the index relation (n·bands
-    3-int rows) fits a broadcast, ship IT and stream the probe side
-    map-side — the index is ~1000× smaller than the probe relation.
-    Above the broadcast budget the join falls back to shuffle, where
-    MIH still wins once n² dominates (candidate volume scales n²,
-    probe volume n) — the same auto-regime discipline as
+    broadcast-index MIH 4.5 s) — :func:`_mih_pairs` broadcasts the
+    index relation (n·bands 3-int rows, ~1000× smaller than the probe
+    relation) under the same auto-regime discipline as
     similarity.py's exact-scan switch.  Scale shape: one payload
     scan (signatures are 2 longs + ``bands`` ints per item); the
     broadcast path shuffles ONLY surviving matches; verify is JVM
     bit_count on the packed longs.  At open scale the residual knob
     is a longer signature (n_blocks=128/256 at fixed radius), which
-    tightens the metric itself.
-
-    Candidates are NOT deduped before the verify: a pair within f in
-    k bands is verified k times (k ≤ bands) and deduped AFTER the
-    Hamming filter, when only surviving pairs remain (measured A/B:
-    pre-verify distinct cost 3.4 s of 7.9 s at sf0.1)."""
-    import math
-
+    tightens the metric itself."""
     if not 1 <= bands <= 64:
         raise ValueError(f"bands={bands} must be in [1, 64]")
-    f = radius // bands
     bounds = [64 * k // bands for k in range(bands + 1)]
-    widths = [e - s for s, e in zip(bounds, bounds[1:])]
-    # size the ball ANALYTICALLY before enumerating — bands=1 would
-    # ask for C(64, ≤10) ≈ 1.5e11 masks and hang inside the generator
-    # if the guard came after
-    n_masks = sum(
-        math.comb(w, k) for w in widths for k in range(f + 1)
-    )
-    if n_masks > 20_000:
-        raise ValueError(
-            f"bands={bands}, radius={radius}: probe ball of "
-            f"{n_masks} masks — use more bands"
-        )
-    ball = [_ball_masks(w, f) for w in widths]
+    ball = _mih_ball([e - s for s, e in zip(bounds, bounds[1:])], radius)
     sigs = blockhash_signatures(
         media, id_col=id_col, payload_col=payload_col, bands=bands
-    ).localCheckpoint(eager=False)
-    # the count below writes the checkpoint blocks; counting
-    # it decides the join regime (broadcast index vs shuffle) without
-    # a second payload scan
-    n_items = sigs.count()
-    small_index = n_items * bands <= 8_000_000
-    keys = sigs.select(
-        F.col(id_col), F.posexplode("bands").alias("band", "bval")
     )
-    # probe side: every key within Hamming f of the item's band value,
-    # enumerated as literal XOR masks (JVM-side explode + int xor —
-    # no Python).  ONE nested-list lit, not per-element F.lit()s — a
-    # 16-bit f=2 ball is 137 masks/band and each F.lit is a py4j
-    # round-trip, so element-wise construction costs thousands of
-    # driver calls before the plan even exists.
-    masks_lit = F.lit(ball)
-    probes = keys.select(
-        F.col(id_col),
-        "band",
-        "bval",
-        F.explode(F.element_at(masks_lit, F.col("band") + 1)).alias("m"),
-    ).select(
-        F.col(id_col),
-        "band",
-        F.expr("bval ^ m").alias("bval"),
-    ) if f > 0 else keys
-    cand = (
-        probes.alias("a")
-        .join(
-            F.broadcast(keys.alias("b")) if small_index else keys.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("media_a"),
-            F.col(f"b.{id_col}").alias("media_b"),
-        )
+    pairs = _mih_pairs(
+        sigs, id_col, ball, ["lo", "hi"], radius, ("media_a", "media_b")
     )
-    sa = sigs.select(
-        F.col(id_col).alias("media_a"),
-        F.col("lo").alias("lo_a"),
-        F.col("hi").alias("hi_a"),
-    )
-    sb = sigs.select(
-        F.col(id_col).alias("media_b"),
-        F.col("lo").alias("lo_b"),
-        F.col("hi").alias("hi_b"),
-    )
-    if small_index:
-        # the verify joins feed the CANDIDATE relation (the big side)
-        # against the 2-long-per-item signature table — same regime
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    return (
-        cand.join(sa, "media_a")
-        .join(sb, "media_b")
-        .select(
-            "media_a",
-            "media_b",
-            F.expr(
-                "CAST(bit_count(lo_a ^ lo_b) + bit_count(hi_a ^ hi_b) "
-                "AS BIGINT)"
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= radius)
-        .distinct()
+    return pairs.select(
+        "media_a", "media_b", F.col("hamming").cast("bigint").alias("hamming")
     )

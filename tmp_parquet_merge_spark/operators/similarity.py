@@ -521,41 +521,6 @@ def _hyperplanes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def srp_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-random-projection bit signature as an int array (one int
-    per plane, 1 if v·h > 0).  All JVM expression trees.
-
-    NOTE: expression-tree form — ``nbits × dim`` interpreted lambda
-    evaluations per row (array HOFs don't codegen).  Kept for small
-    inputs / plan-readability; hot paths use :func:`srp_signature_udf`
-    (one BLAS matmul per Arrow batch, ~10× faster at sf0.1)."""
-    return F.array(
-        *[
-            (
-                dot(vec, F.array(*[F.lit(x) for x in p])) > 0
-            ).cast("int")
-            for p in planes
-        ]
-    )
-
-
-def srp_signature_udf(planes: list[list[float]]):
-    """Arrow-vectorized SRP signature: all ``nbits`` bits of a batch in
-    one numpy matmul against the (dim × nbits) plane matrix.  The
-    ArrowEvalPython node is also a CollapseProject barrier, so the
-    signature is computed exactly once per row however many band keys
-    reference it downstream."""
-    P = np.array(planes, dtype=np.float64).T  # (dim, nbits)
-
-    @pandas_udf("array<int>")
-    def _sig(v: pd.Series) -> pd.Series:
-        X = np.array(v.tolist(), dtype=np.float64)
-        B = (X @ P > 0).astype(np.int32)
-        return pd.Series(list(B))
-
-    return _sig
-
-
 def srp_band_keys_udf(planes: list[list[float]], bands: int):
     """Arrow-vectorized per-band SRP bucket keys: each band's
     ``rows = nbits/bands`` sign bits packed little-endian into one

@@ -20,13 +20,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def simple_plan(df: DataFrame) -> str:
-    """Simple-mode physical plan (shows WholeStageCodegen spans)."""
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "simple"
-    )
-
-
 def plan_tree(df: DataFrame) -> str:
     """Just the operator tree of the formatted plan (each physical
     operator appears exactly once — count nodes here, not in the full
