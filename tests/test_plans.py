@@ -528,7 +528,7 @@ def test_iterative_loop_reuses_persisted_edge_partitioning(spark, nparts):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", orig)
 
 
-def test_compaction_read_phase_is_distributed_footer_scan(spark, sf_dir):
+def test_compaction_read_phase_footer_scan_feeds_aggregate(spark, sf_dir):
     """r10 advisor #3: the compaction queries' READ phases got a
     looser (2 s) bench flag floor because their cost rides writeback/
     page-cache weather — which means a genuine plan regression (e.g.

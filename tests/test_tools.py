@@ -62,7 +62,7 @@ def test_parquet_scan_tool_counts_rows(spark, sf_dir, capsys):
 def test_parquet_merge_cli_merge_and_incremental(spark, sf_dir, tmp_path, capsys):
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     import parquet_merge
 
     from tmp_parquet_merge_spark.sources import parquet_io
@@ -276,3 +276,28 @@ def test_no_unreferenced_package_defs():
     """Dead-code guard: a package helper nobody calls is deleted, not
     kept "for later"."""
     assert _unreferenced_package_defs(Path(__file__).resolve().parents[1]) == []
+
+
+def test_tools_and_tests_resolve_their_own_checkout():
+    """Tools and tests put their own checkout on ``sys.path`` (derived
+    from ``__file__``), never a hard-coded one: a tool run from a second
+    checkout must check that checkout's package, not another's."""
+    import ast
+
+    repo = Path(__file__).resolve().parents[1]
+    offenders = []
+    for path in sorted([*(repo / "tools").rglob("*.py"), *(repo / "tests").rglob("*.py")]):
+        text = path.read_text()
+        if str(repo) in text:
+            offenders.append(f"{path.relative_to(repo)}: names this checkout's path")
+        for node in ast.walk(ast.parse(text)):
+            if (
+                isinstance(node, ast.Call)
+                and ast.unparse(node.func) in ("sys.path.insert", "sys.path.append")
+                and any(
+                    isinstance(a, ast.Constant) and isinstance(a.value, str)
+                    for a in node.args
+                )
+            ):
+                offenders.append(f"{path.relative_to(repo)}:{node.lineno}: {ast.unparse(node)}")
+    assert offenders == []

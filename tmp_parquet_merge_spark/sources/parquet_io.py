@@ -21,6 +21,24 @@ Scale notes: reads/writes are plain DataFrame ops, so they distribute
 scan).  Footer introspection is distributed too: the file list is
 parallelized and footers are read executor-side via mapInPandas —
 at 100 TB / ~1e6 files the driver never holds more than the file list.
+
+Data the driver already holds enters Spark as Arrow, never as pickled
+Python rows.  A ``createDataFrame`` over a Python list becomes a
+PythonRDD whose first action runs a Python-worker job of its own
+(~0.4 s warm on 4 cores for a 16-file list); an Arrow table becomes a
+LocalRelation that costs no job (~0.03 s):
+
+  * file lists (``_file_list_df``: footer/kv/stat scans), the
+    ``schema_dump`` row and the ``compact_incremental`` manifest are
+    Arrow tables, so they plan as ``LocalTableScan``;
+  * a ``read_row_group`` payload (up to ``max_bytes``) is the one
+    exception that must NOT be a LocalRelation: its rows would ride
+    inside every task closure.  It is built as an Arrow-batch RDD by
+    lowering ``spark.sql.execution.arrow.localRelationThreshold`` to 0
+    for that one ``createDataFrame`` only (a ``session_conf`` window),
+    so small broadcast sides elsewhere stay LocalRelations;
+  * ``merge_files`` reads its output back with the schema it just
+    wrote, which saves the footer schema-inference job.
 """
 
 from __future__ import annotations
@@ -30,6 +48,7 @@ import threading
 from collections.abc import Iterator, Sequence
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -569,12 +588,7 @@ def attach_kv_metadata(
     files = _expand_parquet_paths(spark, path)
     if not files:
         return 0
-    files_df = spark.createDataFrame(
-        [(f,) for f in files],
-        T.StructType([T.StructField("file", T.StringType(), False)]),
-    )
-    if len(files) > 64:
-        files_df = files_df.repartition(min(len(files) // 8, 512))
+    files_df = _file_list_df(spark, files)
     kv_bytes = {k.encode("utf8"): v.encode("utf8") for k, v in kv.items()}
 
     # self-contained closure (see metadata_stats note): executors may
@@ -836,7 +850,8 @@ def merge_files(
         kv_metadata=kv_metadata,
         int96_timestamps=int96_timestamps,
     )
-    return spark.read.parquet(output)
+    # the schema just written: reading it back needs no inference job
+    return spark.read.schema(df.schema).parquet(output)
 
 
 def schema_dump(spark: SparkSession, path: str) -> DataFrame:
@@ -849,7 +864,12 @@ def schema_dump(spark: SparkSession, path: str) -> DataFrame:
     """
     schema = spark.read.parquet(path).schema
     return spark.createDataFrame(
-        [(schema.simpleString(), schema.treeString())],
+        pa.table(
+            {
+                "simple_string": [schema.simpleString()],
+                "tree_string": [schema.treeString()],
+            }
+        ),
         T.StructType(
             [
                 T.StructField("simple_string", T.StringType(), False),
@@ -886,11 +906,7 @@ def metadata_stats(spark: SparkSession, *paths: str) -> DataFrame:
     files = [
         f for p in paths for f in _expand_parquet_paths(spark, p)
     ]
-    files_df = spark.createDataFrame(
-        [(f,) for f in files], T.StructType([T.StructField("file", T.StringType(), False)])
-    )
-    if len(files) > 64:  # distribute footer reads only when worth the workers
-        files_df = files_df.repartition(min(len(files) // 8, 512))
+    files_df = _file_list_df(spark, files)
 
     # NB: the closure must be self-contained (no references to names in
     # this package) — executor Python workers may not have the repo on
@@ -940,6 +956,25 @@ def metadata_stats(spark: SparkSession, *paths: str) -> DataFrame:
     return files_df.mapInPandas(scan_footers, schema=_FOOTER_SCHEMA)
 
 
+_FILE_LIST_SCHEMA = T.StructType([T.StructField("file", T.StringType(), False)])
+
+
+def _file_list_df(spark: SparkSession, files: Sequence[str]) -> DataFrame:
+    """The driver's file list as the one-column leaf that the
+    executor-side footer/stat scans map over.  Built from an Arrow
+    table, so it is a LocalRelation: a Python row list would become a
+    pickled PythonRDD and cost a Python-worker job of its own.  Up to
+    64 files the scan runs as one task (one Python worker beats four
+    for a few footers); past that it spreads over ``n // 8`` tasks,
+    capped at 512."""
+    df = spark.createDataFrame(
+        pa.table({"file": pa.array(files, pa.string())}), _FILE_LIST_SCHEMA
+    )
+    if len(files) > 64:
+        return df.repartition(min(len(files) // 8, 512))
+    return df.coalesce(1)
+
+
 # Below this many files a serial driver stat loop is cheaper than a
 # Spark job (64-file compaction benches stay JVM-round-trip-free);
 # above it, stats go executor-side — at the 100 TB design point
@@ -953,12 +988,7 @@ def _file_sizes_df(spark: SparkSession, files: Sequence[str]) -> DataFrame:
     parallelized name list — the metadata_stats pattern applied to
     sizing, so merge/compaction planning never serially stats 1e6
     files on the driver."""
-    files_df = spark.createDataFrame(
-        [(f,) for f in files],
-        T.StructType([T.StructField("file", T.StringType(), False)]),
-    )
-    if len(files) > 64:
-        files_df = files_df.repartition(min(len(files) // 8, 512))
+    files_df = _file_list_df(spark, files)
 
     # self-contained closure (see metadata_stats note)
     def stat_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1080,6 +1110,14 @@ def _strip_scheme(path: str) -> str:
     return path[len("file:") :] if path.startswith("file:") else path
 
 
+_NULLABLE_INTS = {
+    pa.int8(): pd.Int8Dtype(),
+    pa.int16(): pd.Int16Dtype(),
+    pa.int32(): pd.Int32Dtype(),
+    pa.int64(): pd.Int64Dtype(),
+}
+
+
 def read_row_group(
     spark: SparkSession,
     path: str,
@@ -1132,7 +1170,15 @@ def read_row_group(
             "read_parquet (distributed, with row-group skipping)."
         )
     table = pf.read_row_group(row_group, columns=list(columns) if columns else None)
-    return spark.createDataFrame(table.to_pandas())
+    # pandas nullable integers keep a nullable INT32/INT64 column exact
+    # (plain to_pandas turns it into float64); the threshold window
+    # makes Spark keep the batches as an Arrow RDD instead of copying
+    # the rows into a LocalRelation that every task closure carries
+    pdf = table.to_pandas(types_mapper=_NULLABLE_INTS.get)
+    with session_conf(
+        spark, **{"spark.sql.execution.arrow.localRelationThreshold": "0"}
+    ):
+        return spark.createDataFrame(pdf)
 
 
 _COLUMN_STATS_SCHEMA = T.StructType(
@@ -1164,12 +1210,7 @@ def column_stats(spark: SparkSession, *paths: str) -> DataFrame:
     stringified so one uniform schema covers all physical types.
     """
     files = [f for p in paths for f in _expand_parquet_paths(spark, p)]
-    files_df = spark.createDataFrame(
-        [(f,) for f in files],
-        T.StructType([T.StructField("file", T.StringType(), False)]),
-    )
-    if len(files) > 64:
-        files_df = files_df.repartition(min(len(files) // 8, 512))
+    files_df = _file_list_df(spark, files)
 
     out_columns = [f.name for f in _COLUMN_STATS_SCHEMA]
 
@@ -1278,4 +1319,7 @@ def compact_incremental(
             T.StructField("action", T.StringType(), False),
         ]
     )
-    return spark.createDataFrame(rows, manifest_schema)
+    columns = list(zip(*rows)) or [(), (), ()]
+    return spark.createDataFrame(
+        pa.table(columns, names=manifest_schema.names), manifest_schema
+    )

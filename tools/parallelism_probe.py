@@ -22,7 +22,7 @@ session timezone — UTC vs America/New_York at equal parallelism,
 all queries hash-identical (the TIMESTAMP_NTZ discipline means no
 output depends on the session zone)."""
 import sys, os, json, hashlib, math
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pandas as pd
 
 

@@ -8,9 +8,10 @@ Usage: python tools/parquet_dump_schema.py FILE
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main(argv: list[str]) -> int:

@@ -14,10 +14,11 @@ ReadBatch size, default 256 there at :35 — Spark's default 4096).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main(argv: list[str]) -> int:
