@@ -99,3 +99,20 @@ def test_agg_sketch_rows_unchanged(spark, sf_dir):
         for r in REGISTRY["q_agg_sketch"].build(spark, sf_dir).collect()
     }
     assert old == new
+
+
+def test_null_key_and_all_null_groups_kept(spark):
+    # F.percentile keeps the NULL-key group and returns NULL for a
+    # group whose values are all NULL; neither may be dropped
+    rows = [
+        ("a", 1), ("a", 2), ("a", 5),
+        (None, 3), (None, 4),
+        ("b", None), ("b", None),
+    ]
+    df = spark.createDataFrame(rows, "g string, v int")
+    _assert_bit_identical(df, "g", "v", (0.5, 0.9))
+    got = {
+        r[0]: tuple(r[1:])
+        for r in _exact_group_percentiles(df, "g", "v", (0.5, 0.9)).collect()
+    }
+    assert got == {"a": (2.0, 4.4), None: (3.5, 3.9), "b": (None, None)}

@@ -1,14 +1,47 @@
 """Property-based test (hypothesis) for the connected-components
 operator (operators/dedup.py::dedup_clusters) against a union-find
-reference on random graphs — pinning min-label propagation on shapes
-the bundled corpora never produce (long chains, isolated nodes, dense
-blobs, self-loop-free multigraphs).
+reference on random graphs — pinning both of its paths (the driver
+finish and distributed min-label propagation) on shapes the bundled
+corpora never produce (long chains, isolated nodes, dense blobs,
+self-loop-free multigraphs), plus the id edge cases both paths must
+agree on.
 """
 
+import contextlib
+
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from tmp_parquet_merge_spark.operators import _iter_cache, dedup
 from tmp_parquet_merge_spark.operators.dedup import dedup_clusters
+
+_PATHS = ("driver", "distributed")
+
+
+def _refuse(*_a, **_k):
+    raise AssertionError("dedup_clusters took the other path")
+
+
+@contextlib.contextmanager
+def _on_path(path):
+    """Run dedup_clusters on one path only; the other one raises.  A
+    cap of -1 sends every edge list, the empty one included, to the
+    distributed loop."""
+    with pytest.MonkeyPatch.context() as m:
+        if path == "driver":
+            m.setattr(_iter_cache, "keyed_edge_cache", _refuse)
+        else:
+            m.setattr(dedup, "_DRIVER_EDGES", -1)
+            m.setattr(dedup, "_driver_clusters", _refuse)
+        yield
+
+
+@pytest.fixture(params=_PATHS)
+def cluster_path(request):
+    with _on_path(request.param):
+        yield request.param
+
 
 _N = 12  # node ids 0.._N-1
 _EDGES = st.lists(
@@ -57,11 +90,65 @@ def test_dedup_clusters_matches_union_find(spark, edges):
     nodes = spark.createDataFrame(
         [(n,) for n in range(_N)], "doc_id long"
     )
-    got = {
-        r.doc_id: r.cluster_id
-        for r in dedup_clusters(pairs, nodes, "doc_id").collect()
+    want = _union_find_reference(edges)
+    for path in _PATHS:
+        with _on_path(path):
+            got = {
+                r.doc_id: r.cluster_id
+                for r in dedup_clusters(pairs, nodes, "doc_id").collect()
+            }
+        assert got == want, path
+
+
+def _clusters(spark, pairs, nodes, ddl):
+    p = spark.createDataFrame(pairs, f"doc_a {ddl}, doc_b {ddl}")
+    n = spark.createDataFrame([(x,) for x in nodes], f"doc_id {ddl}")
+    out = dedup_clusters(p, n, "doc_id")
+    assert out.schema["cluster_id"].dataType == n.schema["doc_id"].dataType
+    rows = out.collect()
+    assert len(rows) == len(nodes)
+    return {r.doc_id: r.cluster_id for r in rows}
+
+
+def test_dedup_clusters_string_ids_utf8_order(spark, cluster_path):
+    """The label is the component minimum in UTF-8 byte order, as
+    Spark's ``min`` compares strings.  U+FF21 sorts before U+1D11E in
+    UTF-8 (and code point) order but after it in UTF-16 order."""
+    got = _clusters(
+        spark,
+        [("\U0001d11e", "\uff21"), ("z", "é"), ("é", "日本"), ("ä", "b")],
+        ["\U0001d11e", "\uff21", "z", "é", "日本", "ä", "b", "Zed"],
+        "string",
+    )
+    assert got == {
+        "\U0001d11e": "\uff21",
+        "\uff21": "\uff21",
+        "z": "z",
+        "é": "z",
+        "日本": "z",
+        "ä": "b",
+        "b": "b",
+        "Zed": "Zed",
     }
-    assert got == _union_find_reference(edges)
+
+
+def test_dedup_clusters_null_and_absent_ids(spark, cluster_path):
+    """NULL-endpoint edges are ignored and a NULL node keeps a NULL
+    cluster_id.  Endpoints absent from ``nodes`` (99, 0) are inert:
+    not output, and no bridge — 1 and 2 stay apart through 99, and 5
+    does not take the absent 0 as its label."""
+    got = _clusters(
+        spark,
+        [(1, 99), (99, 2), (5, 0), (3, None), (None, 4), (6, 7), (7, 3)],
+        [1, 2, 3, 4, 5, 6, 7, None],
+        "long",
+    )
+    assert got == {1: 1, 2: 2, 3: 3, 4: 4, 5: 5, 6: 3, 7: 3, None: None}
+
+
+def test_dedup_clusters_empty_edge_set(spark, cluster_path):
+    got = _clusters(spark, [], ["b", "a", None], "string")
+    assert got == {"a": "a", "b": "b", None: None}
 
 
 _DOC_WORDS = st.lists(

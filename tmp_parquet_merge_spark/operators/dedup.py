@@ -22,10 +22,28 @@ The shingle-set operators share one boundary between candidate
 generation and scoring: the pair-counts relation
 ``(doc_a, doc_b, n_inter, n_a, n_b)``.  Candidate generators produce it
 — the all-pairs shared-shingle join (:func:`_shingle_pair_counts`), or
-MinHash band keys (:func:`_minhash_bands` → :func:`_band_candidates`)
-and the rare-shingle index, each verified by :func:`_set_counts` over
-:func:`_shingle_sets` — and scorers read it: :func:`_jaccard_pairs` and
+MinHash band keys and the rare-shingle index, each verified by
+:func:`_set_counts` — and scorers read it: :func:`_jaccard_pairs` and
 :func:`_containment_pairs` hold the only spelling of each formula.
+The MinHash side feeds it from one doc-keyed stage,
+:func:`_minhash_docs`: a single ``groupBy("doc")`` computes each
+document's shingle set and signature behind one checkpoint
+``(doc, sh, sig)``; the band rows (:func:`_band_rows` →
+:func:`_band_candidates`) and both sides of the verify read it.  The
+rare-shingle index computes no signatures and keeps its
+candidate-docs-only :func:`_shingle_sets`.
+
+Two boundaries are crossed a constant number of times per call, not
+once per lane or per round:
+
+  * Python ↔ JVM — wide columns (the MinHash lanes, the band keys,
+    the SimHash votes and fold) are each ONE ``F.expr`` generated from
+    integers, not one py4j-built ``Column`` per lane.
+  * driver ↔ scheduler — :func:`dedup_clusters` pulls a near-dup graph
+    of up to ``_DRIVER_EDGES`` edges to the driver in one Arrow
+    collect, solves its components in numpy and returns the labels as
+    an Arrow LocalRelation; only larger graphs run the distributed
+    min-label propagation, one checkpoint and probe per round.
 The Hamming-space operators (SimHash here, perceptual media hashes in
 ``multimodal``) share the multi-index core beside
 ``multimodal._ball_masks``: :func:`multimodal._mih_ball` sizes and
@@ -38,6 +56,9 @@ codegen); there are no Python UDFs in any hot path.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -716,64 +737,84 @@ def _minhash_rows(num_perm: int, bands: int) -> int:
     return num_perm // bands
 
 
-def _minhash_bands(sh: DataFrame, num_perm: int, bands: int) -> DataFrame:
-    """Shingle rows ``(doc, s)`` → banded MinHash keys
-    ``(doc, band, key)``.
+def _minhash_docs(sh: DataFrame, num_perm: int, *, sets: bool) -> DataFrame:
+    """Shingle rows ``(doc, s)`` → the one doc-keyed MinHash relation
+    ``(doc, sh, sig)``: the shingle set and the ``num_perm``-lane
+    signature from ONE ``groupBy("doc")``, behind one checkpoint.
+    ``sets=False`` (unverified candidates) drops the ``collect_set``
+    and returns ``(doc, sig)``.
 
     Permutation i is murmur3 with the lane index mixed into an 8-byte
-    xxhash64 digest of the shingle (``F.hash(xxhash64(s), lit(i))``);
-    the min over a doc's shingles estimates h_min of permutation i.
-    One O(len) string hash per shingle, then ``num_perm`` murmur3
-    mixes — vs hashing the string once PER LANE (num_perm × O(len),
-    the dominant signature cost on long shingles).  Cross-lane
-    collisions require an xxhash64 collision (~2^-64 per shingle pair):
-    the standard one-hash k-derive MinHash construction.  Shaped as
-    explode → hash-agg (NOT an array ``transform`` lambda): projections
-    and min-aggregates run under whole-stage codegen, whereas
-    higher-order-function lambdas are interpreted per element —
-    measured ~20× slower at sf0.1.
+    xxhash64 digest of the shingle (``hash(xxhash64(s), i)``); the min
+    over a doc's shingles estimates h_min of permutation i.  One
+    O(len) string hash per shingle, then ``num_perm`` murmur3 mixes —
+    vs hashing the string once PER LANE (num_perm × O(len), the
+    dominant signature cost on long shingles).  Cross-lane collisions
+    require an xxhash64 collision (~2^-64 per shingle pair): the
+    standard one-hash k-derive MinHash construction.  Shaped as
+    explode → hash-agg (NOT an array ``transform`` lambda): the
+    per-lane mins are plain aggregates, whereas higher-order-function
+    lambdas are interpreted per element — measured ~20× slower at
+    sf0.1.
 
-    The signature relation is checkpointed: it feeds both sides of a
-    band join, and alias boundaries defeat ReuseExchange, so without
-    it the ``num_perm``-min aggregate runs twice.  It holds one
-    doc-keyed row per document, tiny to hold."""
-    rows = _minhash_rows(num_perm, bands)
-    h = sh.select("doc", F.xxhash64("s").alias("h"))
-    sigs = (
-        h.groupBy("doc")
-        .agg(
-            *[
-                F.min(F.hash("h", F.lit(i))).alias(f"h{i}")
-                for i in range(num_perm)
-            ]
-        )
-        .select("doc", F.array(*[f"h{i}" for i in range(num_perm)]).alias("sig"))
+    The lanes are ONE ``F.expr`` (``array(min(hash(h, 0)), …)``)
+    generated from integers only: built as ``num_perm`` separate
+    ``Column`` objects they cost one py4j round trip each (~8 ms a
+    lane, ~3,000 round trips per call), while the SQL text is parsed
+    JVM-side in one call.  The expression is the same murmur3 over the
+    same digest with the same ``int`` lane literals, so signatures are
+    bit-identical to the per-Column spelling.
+
+    The relation is checkpointed: it feeds both sides of the band join
+    and both sides of the verify (:func:`_set_counts`), and alias
+    boundaries defeat ReuseExchange, so without it the aggregate runs
+    once per consumer.  It holds one row per document."""
+    lanes = F.expr(
+        "array("
+        + ", ".join(f"min(hash(h, {i}))" for i in range(num_perm))
+        + ")"
+    )
+    h = F.xxhash64("s").alias("h")
+    if sets:
+        pre, aggs = ("doc", "s", h), (F.collect_set("s").alias("sh"),)
+    else:
+        pre, aggs = ("doc", h), ()
+    return (
+        sh.select(*pre)
+        .groupBy("doc")
+        .agg(*aggs, lanes.alias("sig"))
         .localCheckpoint(eager=False)
     )
-    return sigs.select(
-        "doc", F.explode(lsh_band_keys(F.col("sig"), bands, rows)).alias("bk")
-    ).select("doc", "bk.band", "bk.key")
 
 
-def lsh_band_keys(sig: Column, bands: int, rows: int) -> Column:
-    """Split a MinHash signature into ``bands`` keys of ``rows`` lanes
-    each; each key is murmur3 of the band's lane slice.  Two docs land
-    in the same (band, key) bucket iff that band's lanes all match."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.hash(F.slice(sig, b * rows + 1, rows)).alias("key"),
-            )
+def _band_rows(docs: DataFrame, bands: int, rows: int) -> DataFrame:
+    """A :func:`_minhash_docs` relation → banded keys
+    ``(doc, band, key)``, one row per (doc, band)."""
+    return docs.select("doc", F.inline(lsh_band_keys("sig", bands, rows)))
+
+
+def lsh_band_keys(sig: str, bands: int, rows: int) -> Column:
+    """Split the MinHash signature column ``sig`` into ``bands`` keys
+    of ``rows`` lanes each; each key is murmur3 of the band's lane
+    slice.  Two docs land in the same (band, key) bucket iff that
+    band's lanes all match.  One ``F.expr`` over integer literals (see
+    :func:`_minhash_docs`); the column name is backquoted."""
+    col = "`" + sig.replace("`", "``") + "`"
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('band', {b}, "
+            f"'key', hash(slice({col}, {b * rows + 1}, {rows})))"
             for b in range(bands)
-        ]
+        )
+        + ")"
     )
 
 
 def _band_candidates(a: DataFrame, b: DataFrame) -> DataFrame:
     """Distinct ``(doc_a, doc_b)`` pairs sharing a (band, key) bucket
-    between two :func:`_minhash_bands` relations.  A self-join caller
-    adds ``doc_a < doc_b``."""
+    between two :func:`_band_rows` relations.  A self-join caller adds
+    ``doc_a < doc_b``."""
     a = a.select(F.col("doc").alias("doc_a"), "band", "key")
     b = b.select(F.col("doc").alias("doc_b"), "band", "key")
     return a.join(b, ["band", "key"]).select("doc_a", "doc_b").distinct()
@@ -795,8 +836,9 @@ def _set_counts(
     cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame
 ) -> DataFrame:
     """Candidate pairs ``(doc_a, doc_b)`` → pair counts
-    ``(doc_a, doc_b, n_inter, n_a, n_b)`` from :func:`_shingle_sets`
-    relations.  Only candidates are verified (an all-pairs join here
+    ``(doc_a, doc_b, n_inter, n_a, n_b)`` from doc-keyed ``(doc, sh)``
+    relations (:func:`_minhash_docs`, :func:`_shingle_sets`).  Only
+    candidates are verified (an all-pairs join here
     would defeat the candidate cut), and the O(|set|)
     ``array_intersect`` runs ONCE per candidate: with the score as a
     live expression, filter pushdown re-inlines it into both the
@@ -840,25 +882,84 @@ def minhash_dedup_pairs(
     plate) are the skew risk — AQE skew-join splits them, and the
     verify join is on doc ids, which are uniform.
     """
-    _minhash_rows(num_perm, bands)
-    # the shingle pipeline (explode → window → distinct) feeds BOTH the
-    # signature stage and the verify stage; Catalyst does not fuse the
-    # two subplans, so materialize it once (local checkpoint, bounded
-    # by corpus token count, the same data both branches must read).
-    # eager=False does not defer the work under AQE: the call itself
-    # runs the upstream shuffle stage, the first action writes the
-    # blocks, and the second consumer reads them from executor cache
-    sh = shingle_rows(df, text_col, id_col, n=shingle_n)
-    if verify_threshold is not None:
-        sh = sh.localCheckpoint(eager=False)
-    banded = _minhash_bands(sh, num_perm, bands)
+    rows = _minhash_rows(num_perm, bands)
+    # one doc-keyed stage feeds the bands AND the verify sets, so the
+    # shingle rows have a single consumer and need no checkpoint
+    docs = _minhash_docs(
+        shingle_rows(df, text_col, id_col, n=shingle_n),
+        num_perm,
+        sets=verify_threshold is not None,
+    )
+    banded = _band_rows(docs, bands, rows)
     cand = _band_candidates(banded, banded).filter(
         F.col("doc_a") < F.col("doc_b")
     )
     if verify_threshold is None:
         return cand
-    sets_ = _shingle_sets(sh)
-    return _jaccard_pairs(_set_counts(cand, sets_, sets_), verify_threshold)
+    return _jaccard_pairs(_set_counts(cand, docs, docs), verify_threshold)
+
+
+# Edge count up to which dedup_clusters solves components on the
+# driver: two id columns of 2M edges are ~32 MB of Arrow, the same
+# order as a broadcast-join side (autoBroadcastJoinThreshold spirit).
+_DRIVER_EDGES = 2_000_000
+
+
+def _min_labels(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Component labels over ``n`` dense node indices joined by the
+    edge index arrays ``a``/``b``: ``label[i]`` is the smallest index
+    in i's component.  Min-hooking plus pointer jumping in numpy:
+    each round hooks every edge's larger root under the smaller one
+    (``np.minimum.at``), then jumps pointers until every node points at
+    a root.  Labels only decrease and stay inside their component, so
+    when every edge joins equal labels each label is its component's
+    minimum."""
+    lab = np.arange(n)
+    while True:
+        la, lb = lab[a], lab[b]
+        if np.array_equal(la, lb):
+            return lab
+        lo = np.minimum(la, lb)
+        np.minimum.at(lab, la, lo)
+        np.minimum.at(lab, lb, lo)
+        while True:
+            nxt = lab[lab]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
+
+
+def _driver_clusters(
+    edges: pa.Table, nodes: DataFrame, id_col: str
+) -> DataFrame:
+    """:func:`dedup_clusters`' driver finish for an edge list already
+    on the driver: a ``pyarrow.Table`` of (src, dst) with both
+    endpoints non-NULL node ids.  Dense indices come from the sorted
+    unique endpoints — Arrow sorts strings by their UTF-8 bytes, as
+    Spark's ``min`` does — so the smallest index is the smallest id."""
+    src, dst = (edges.column(i).combine_chunks() for i in (0, 1))
+    ids = pc.unique(pa.concat_arrays([src, dst]))
+    ids = ids.take(pc.sort_indices(ids))
+    lab = _min_labels(
+        len(ids),
+        pc.index_in(src, value_set=ids).to_numpy(),
+        pc.index_in(dst, value_set=ids).to_numpy(),
+    )
+    moved = np.flatnonzero(lab != np.arange(len(ids)))
+    if len(moved) == 0:
+        return nodes.select(F.col(id_col), F.col(id_col).alias("cluster_id"))
+    labels = nodes.sparkSession.createDataFrame(
+        pa.table({"__node": ids.take(moved), "__label": ids.take(lab[moved])})
+    )
+    id_type = nodes.schema[id_col].dataType
+    return nodes.join(
+        F.broadcast(labels), F.col(id_col) == F.col("__node"), "left"
+    ).select(
+        F.col(id_col),
+        F.coalesce(F.col("__label").cast(id_type), F.col(id_col)).alias(
+            "cluster_id"
+        ),
+    )
 
 
 def dedup_clusters(
@@ -867,7 +968,6 @@ def dedup_clusters(
     id_col: str = "doc_id",
     *,
     max_iter: int = 25,
-    check_every: int = 1,
 ) -> DataFrame:
     """Connected components over near-dup pairs — the final stage of a
     dedup pipeline: (doc_a, doc_b) edges → one ``cluster_id`` per
@@ -875,35 +975,59 @@ def dedup_clusters(
     their own id, so the output covers EVERY input document and
     ``cluster_id == doc_id`` selects the survivors of the corpus).
 
-    Algorithm: iterative min-label propagation.  Each round every node
-    takes the min of its own label and its neighbours' labels; a round
-    is one shuffled join + one hash-agg, and convergence needs
-    O(component diameter) rounds — near-dup graphs are dense clique-ish
-    blobs with tiny diameters, so 3–5 rounds in practice (``max_iter``
-    is a backstop; the large-star/small-star alternation of Kiveris et
-    al. would cut worst-case rounds to O(log n) if ever needed).
+    Two paths, one contract.  The edges are pulled once with
+    ``limit(_DRIVER_EDGES + 1).toArrow()``:
 
-    Scale notes: ``localCheckpoint`` after every round truncates the
-    lineage so plan size stays constant across iterations (on a real
-    cluster prefer ``checkpoint`` to a reliable dir for fault
+    * at most ``_DRIVER_EDGES`` edges (2M, ~32 MB of Arrow — near-dup
+      graphs are tiny next to their corpus): the driver finish.  The
+      components are solved in numpy (:func:`_min_labels`), and the
+      labels of non-root nodes return as an Arrow LocalRelation that
+      is broadcast-left-joined onto ``nodes`` as
+      ``coalesce(label, node)``.  The pull keeps only edges whose
+      endpoints are both node ids (two semi-joins onto ``nodes``; one
+      extra job when ``nodes`` broadcasts), and no job runs per
+      round, however deep the graph.
+    * above the cap: distributed min-label propagation, below.
+
+    Both paths: the label is the component's minimum id (strings in
+    UTF-8 binary order); an edge with a NULL endpoint is ignored; a
+    NULL node id gets a NULL ``cluster_id``; an endpoint absent from
+    ``nodes`` is inert — neither output nor a bridge between
+    components.
+
+    Distributed path: iterative min-label propagation.  Each round
+    every node takes the min of its own label and its neighbours'
+    labels; a round is one shuffled join + one hash-agg, and
+    convergence needs O(component diameter) rounds — near-dup graphs
+    are dense clique-ish blobs with tiny diameters, so 3–5 rounds in
+    practice (``max_iter`` is a backstop; the large-star/small-star
+    alternation of Kiveris et al., "Connected Components in MapReduce
+    and Beyond" (SoCC 2014), would cut worst-case rounds to O(log n)
+    if ever needed).  ``localCheckpoint`` after every round truncates
+    the lineage so plan size stays constant across iterations (on a
+    real cluster prefer ``checkpoint`` to a reliable dir for fault
     tolerance).  Convergence is detected from the monotonically
-    decreasing sum of labels — one lightweight agg per round instead of
-    a change-count join against the previous labels — taken right
+    decreasing sum of labels — one lightweight agg per round instead
+    of a change-count join against the previous labels — taken right
     after a ``localCheckpoint(eager=False)``.  Under AQE that call is
     not lazy: it runs the round's upstream shuffle stage itself (one
     job), and the convergence agg then materializes the checkpoint
-    blocks as it scans.  ``check_every``
-    batches N propagation rounds into one eager checkpoint job and one
-    convergence read (the PageRank loop's cadence knob): labels are
-    monotone, so skipped checks can only cost up to N-1 no-op rounds
-    after the fixpoint, never wrong labels.  Measured a wash at bench
-    scale (the saved scalar reads ≈ the extra propagation rounds), so
-    callers keep the default 1; the knob matters when a round is
-    expensive relative to a cached-state scan (deep graphs).
+    blocks as it scans.
     """
     from tmp_parquet_merge_spark.operators._iter_cache import keyed_edge_cache
 
     e = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    # the loop never labels a NULL or absent endpoint, so an edge
+    # touching one carries nothing: keep only node-to-node edges
+    ids = nodes.select(id_col)
+    live = (
+        e.join(ids.toDF("src"), "src", "left_semi")
+        .join(ids.toDF("dst"), "dst", "left_semi")
+        .select("src", "dst")
+    )
+    pulled = live.limit(_DRIVER_EDGES + 1).toArrow()
+    if pulled.num_rows <= _DRIVER_EDGES:
+        return _driver_clusters(pulled, nodes, id_col)
     # the loop-invariant symmetrized edge list is cached pre-
     # partitioned + sorted on the join key (same fix as
     # pagerank — see operators/_iter_cache.py): rounds then only
@@ -941,8 +1065,6 @@ def dedup_clusters(
                     "label"
                 ),
             )
-            if it % check_every != 0 and it != max_iter:
-                continue
             # Non-eager checkpoint + immediate scalar probe.  Under AQE
             # the call still runs the round's upstream shuffle stage
             # (one job); the probe's action then writes the checkpoint
@@ -1019,39 +1141,35 @@ def simhash(df: DataFrame, text_col: str, id_col: str, *, bits: int = 64) -> Dat
     df = spread_scan(df, id_col)
     tok = df.select(
         F.col(id_col).alias("doc"), F.explode(words(text_col)).alias("w")
-    ).select(
+    ).selectExpr(
         "doc",
         *[
-            F.conv(F.substring(F.md5("w"), 1 + 4 * i, 4), 16, 10)
-            .cast("long")
-            .alias(f"p{i}")
+            f"CAST(conv(substring(md5(w), {1 + 4 * i}, 4), 16, 10) AS BIGINT)"
+            f" AS p{i}"
             for i in range(4)
         ],
     )
+    # the vote lanes and the fold are one SQL expression each, built
+    # from integers only (one py4j round trip instead of one per
+    # lane; see _minhash_docs)
     votes = tok.groupBy("doc").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(f"p{3 - b // 16}", b % 16).bitwiseAND(F.lit(1))
-                    == 1,
-                    1,
-                ).otherwise(-1)
-            ).alias(f"b{b}")
-            for b in range(bits)
-        ]
+        F.expr(
+            "array("
+            + ", ".join(
+                f"sum(CASE WHEN (shiftright(p{3 - b // 16}, {b % 16}) & 1)"
+                " = 1 THEN 1 ELSE -1 END)"
+                for b in range(bits)
+            )
+            + ")"
+        ).alias("v")
     )
-    # bit 63 of a signed long is the sign bit: its contribution is the
-    # negative 2^63, everything else is the plain power of two.
-    def bit_val(b: int) -> int:
-        return -(1 << 63) if b == 63 else 1 << b
-
-    sig = sum(
-        (
-            F.when(F.col(f"b{b}") > 0, F.lit(bit_val(b))).otherwise(0)
-            for b in range(bits)
-        ),
-        F.lit(0),
-    ).cast("long")
+    # bit b set iff its vote total is positive; shiftleft(1L, 63) is
+    # the sign bit, so the OR of the set bits is the signed signature
+    sig = F.expr(
+        " | ".join(
+            f"IF(v[{b}] > 0, shiftleft(1L, {b}), 0L)" for b in range(bits)
+        )
+    )
     return votes.select("doc", sig.alias("simhash"))
 
 
@@ -1303,19 +1421,17 @@ def novelty_neardup(
     against the verified-duplicate ids.  Shuffles carry (band, key,
     id) triples and shingle digests; bodies never move.  Returns the
     NOVEL new-batch rows (id only — callers re-join attributes)."""
-    _minhash_rows(num_perm, bands)
-    # each side's shingle rows feed both its signatures and its sets
-    sh_n, sh_o = (
-        shingle_rows(d, text_col, id_col, n=shingle_n).localCheckpoint(
-            eager=False
+    rows = _minhash_rows(num_perm, bands)
+    docs_n, docs_o = (
+        _minhash_docs(
+            shingle_rows(d, text_col, id_col, n=shingle_n), num_perm, sets=True
         )
         for d in (new_df, old_df)
     )
     cand = _band_candidates(
-        _minhash_bands(sh_n, num_perm, bands),
-        _minhash_bands(sh_o, num_perm, bands),
+        _band_rows(docs_n, bands, rows), _band_rows(docs_o, bands, rows)
     )
-    counts = _set_counts(cand, _shingle_sets(sh_n), _shingle_sets(sh_o))
+    counts = _set_counts(cand, docs_n, docs_o)
     dup_new = (
         _jaccard_pairs(counts, threshold)
         .select(F.col("doc_a").alias(id_col))

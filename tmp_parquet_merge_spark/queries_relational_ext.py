@@ -106,6 +106,18 @@ def q_percentiles(spark, sf_dir):
     )
 
 
+def _join_groups(left, right, keys, how="inner"):
+    """``left.join(right, keys, how)`` with NULL-safe key equality: a
+    NULL group key is a group like any other (``F.percentile`` keeps
+    it), while a plain equi-join drops it."""
+    renamed = {k: f"__r{k}" for k in keys}
+    on = [F.col(k).eqNullSafe(F.col(r)) for k, r in renamed.items()]
+    return (
+        left.join(right.withColumnsRenamed(renamed), on, how)
+        .drop(*renamed.values())
+    )
+
+
 def _exact_group_percentiles(
     df,
     group_col: str,
@@ -153,20 +165,21 @@ def _exact_group_percentiles(
     from pyspark.sql import Window
 
     v = F.col(val_col).cast("double")
-    rows = df.select(
-        F.col(group_col).alias("__g"), v.alias("__v")
-    ).filter(F.col("__v").isNotNull())
+    rows = df.select(F.col(group_col).alias("__g"), v.alias("__v"))
     # NO spread_scan here (measured): a keyless round-robin spread
     # of the 600k-row value relation cost MORE than the single-task
     # map passes it parallelized (warm 2.8 -> 3.9 s — the repartition
     # pays sortBeforeRepartition plus a corpus exchange per consumer
     # branch).  The passes are already map-side-combined hash-aggs, so
     # at scale the scan's native splits parallelize them.
+    # every group has a stats row, an all-NULL group with __n = 0 (it
+    # selects no position and comes back NULL, as F.percentile does)
     stats = rows.groupBy("__g").agg(
-        F.count(F.lit(1)).alias("__n"),
+        F.count("__v").alias("__n"),
         F.min("__v").alias("__vmin"),
         F.max("__v").alias("__vmax"),
     )
+    rows = rows.filter(F.col("__v").isNotNull())
     step = (F.col("__vmax") - F.col("__vmin")) / F.lit(float(n_buckets))
     bucket = (
         F.when(
@@ -179,7 +192,7 @@ def _exact_group_percentiles(
         .otherwise(F.lit(0))
         .cast("int")
     )
-    hb = rows.join(F.broadcast(stats), "__g").select(
+    hb = _join_groups(rows, F.broadcast(stats), ["__g"]).select(
         "__g", "__v", bucket.alias("__b")
     )
     hist = hb.groupBy("__g", "__b").agg(F.count(F.lit(1)).alias("__c"))
@@ -208,24 +221,28 @@ def _exact_group_percentiles(
     in_bucket = lambda r: (F.col("__before") <= r) & (  # noqa: E731
         r < F.col("__before") + F.col("__c")
     )
-    blo = tg.join(cum, "__g").filter(in_bucket(F.col("__lo"))).select(
-        "__g",
-        "__p",
-        "__pos",
-        "__lo",
-        "__hi",
-        F.col("__b").alias("__b_lo"),
-        F.col("__before").alias("__off"),
+    blo = (
+        _join_groups(tg, cum, ["__g"])
+        .filter(in_bucket(F.col("__lo")))
+        .select(
+            "__g",
+            "__p",
+            "__pos",
+            "__lo",
+            "__hi",
+            F.col("__b").alias("__b_lo"),
+            F.col("__before").alias("__off"),
+        )
     )
     bhi = (
-        tg.join(cum, "__g")
+        _join_groups(tg, cum, ["__g"])
         .filter(in_bucket(F.col("__hi")))
         .select("__g", "__p", F.col("__b").alias("__b_hi"))
     )
-    sel = blo.join(bhi, ["__g", "__p"])
+    sel = _join_groups(blo, bhi, ["__g", "__p"])
     cand = hb.join(
         F.broadcast(sel.withColumnRenamed("__g", "__sg")),
-        (F.col("__g") == F.col("__sg"))
+        F.col("__g").eqNullSafe(F.col("__sg"))
         & ((F.col("__b") == F.col("__b_lo")) | (F.col("__b") == F.col("__b_hi"))),
     )
     wr = Window.partitionBy("__g", "__p").orderBy("__v")
@@ -245,9 +262,14 @@ def _exact_group_percentiles(
         (F.col("__hi") - F.col("__pos")) * F.col("__vlo")
         + (F.col("__pos") - F.col("__lo")) * F.col("__vhi")
     )
-    out = res.groupBy("__g").pivot(
-        "__p", [float(p) for p in pcts]
-    ).agg(F.first(val))
+    out = _join_groups(
+        stats.select("__g"),
+        res.groupBy("__g").pivot("__p", [float(p) for p in pcts]).agg(
+            F.first(val)
+        ),
+        ["__g"],
+        "left",
+    )
     if names is None:
         names = [f"p{int(p * 100)}" for p in pcts]
     renames = [F.col("__g").alias(group_col)] + [
