@@ -789,16 +789,19 @@ def test_dedup_clusters_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7}
 
 
-def test_dedup_clusters_long_chain_converges(spark):
+def test_dedup_clusters_long_chain_converges(spark, on_cluster_path):
     # a 20-node path is the worst case for min-label propagation:
-    # needs O(diameter) rounds, still must converge under max_iter
+    # needs O(diameter) rounds, still must converge under max_iter;
+    # both paths, the distributed one pinned
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 20)], "doc_a: long, doc_b: long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, 21)], "doc_id: long")
-    out = dedup.dedup_clusters(pairs, nodes, "doc_id")
-    assert out.select("cluster_id").distinct().collect()[0][0] == 1
-    assert out.count() == 20
+    for path in ("driver", "distributed"):
+        with on_cluster_path(path):
+            rows = dedup.dedup_clusters(pairs, nodes, "doc_id").collect()
+        assert {r.cluster_id for r in rows} == {1}, path
+        assert len(rows) == 20, path
 
 
 def test_split_assign_deterministic_partition(spark, docs):
@@ -1097,7 +1100,7 @@ def test_minhash_rejects_non_dividing_bands(spark):
         dedup.minhash_dedup_pairs(df, "text", "doc_id", num_perm=64, bands=100)
 
 
-def test_dedup_clusters_string_ids_converge(spark):
+def test_dedup_clusters_string_ids_converge(spark, on_cluster_path):
     """String doc ids must propagate to a true fixpoint: the numeric
     convergence probe (sum of cast(label as decimal)) yields NULL for
     strings and NULL == NULL would declare convergence after ONE round,
@@ -1109,11 +1112,15 @@ def test_dedup_clusters_string_ids_converge(spark):
     nodes = spark.createDataFrame(
         [("d1",), ("d2",), ("d3",), ("d4",), ("z9",)], "doc_id: string"
     )
-    got = {
-        r.doc_id: r.cluster_id
-        for r in dedup.dedup_clusters(pairs, nodes, "doc_id").collect()
-    }
-    assert got == {"d1": "d1", "d2": "d1", "d3": "d1", "d4": "d1", "z9": "z9"}
+    for path in ("driver", "distributed"):
+        with on_cluster_path(path):
+            got = {
+                r.doc_id: r.cluster_id
+                for r in dedup.dedup_clusters(pairs, nodes, "doc_id").collect()
+            }
+        assert got == {
+            "d1": "d1", "d2": "d1", "d3": "d1", "d4": "d1", "z9": "z9"
+        }, path
 
 
 def test_editdist_empty_norm_pair_sim_is_one(spark):

@@ -7,41 +7,10 @@ self-loop-free multigraphs), plus the id edge cases both paths must
 agree on.
 """
 
-import contextlib
-
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from tmp_parquet_merge_spark.operators import _iter_cache, dedup
 from tmp_parquet_merge_spark.operators.dedup import dedup_clusters
-
-_PATHS = ("driver", "distributed")
-
-
-def _refuse(*_a, **_k):
-    raise AssertionError("dedup_clusters took the other path")
-
-
-@contextlib.contextmanager
-def _on_path(path):
-    """Run dedup_clusters on one path only; the other one raises.  A
-    cap of -1 sends every edge list, the empty one included, to the
-    distributed loop."""
-    with pytest.MonkeyPatch.context() as m:
-        if path == "driver":
-            m.setattr(_iter_cache, "keyed_edge_cache", _refuse)
-        else:
-            m.setattr(dedup, "_DRIVER_EDGES", -1)
-            m.setattr(dedup, "_driver_clusters", _refuse)
-        yield
-
-
-@pytest.fixture(params=_PATHS)
-def cluster_path(request):
-    with _on_path(request.param):
-        yield request.param
-
 
 _N = 12  # node ids 0.._N-1
 _EDGES = st.lists(
@@ -79,7 +48,7 @@ def _union_find_reference(edges):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(edges=_EDGES)
-def test_dedup_clusters_matches_union_find(spark, edges):
+def test_dedup_clusters_matches_union_find(spark, on_cluster_path, edges):
     # drop self-loops: the pair generators never emit (x, x)
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(
@@ -91,8 +60,8 @@ def test_dedup_clusters_matches_union_find(spark, edges):
         [(n,) for n in range(_N)], "doc_id long"
     )
     want = _union_find_reference(edges)
-    for path in _PATHS:
-        with _on_path(path):
+    for path in ("driver", "distributed"):
+        with on_cluster_path(path):
             got = {
                 r.doc_id: r.cluster_id
                 for r in dedup_clusters(pairs, nodes, "doc_id").collect()

@@ -789,26 +789,17 @@ def _minhash_docs(sh: DataFrame, num_perm: int, *, sets: bool) -> DataFrame:
 
 def _band_rows(docs: DataFrame, bands: int, rows: int) -> DataFrame:
     """A :func:`_minhash_docs` relation → banded keys
-    ``(doc, band, key)``, one row per (doc, band)."""
-    return docs.select("doc", F.inline(lsh_band_keys("sig", bands, rows)))
-
-
-def lsh_band_keys(sig: str, bands: int, rows: int) -> Column:
-    """Split the MinHash signature column ``sig`` into ``bands`` keys
-    of ``rows`` lanes each; each key is murmur3 of the band's lane
-    slice.  Two docs land in the same (band, key) bucket iff that
-    band's lanes all match.  One ``F.expr`` over integer literals (see
-    :func:`_minhash_docs`); the column name is backquoted."""
-    col = "`" + sig.replace("`", "``") + "`"
-    return F.expr(
-        "array("
-        + ", ".join(
-            f"named_struct('band', {b}, "
-            f"'key', hash(slice({col}, {b * rows + 1}, {rows})))"
-            for b in range(bands)
-        )
-        + ")"
+    ``(doc, band, key)``, one row per (doc, band): ``bands`` keys of
+    ``rows`` lanes each, the key murmur3 of the band's lane slice.  Two
+    docs land in the same (band, key) bucket iff that band's lanes all
+    match.  The keys are one ``F.expr`` over integer literals (see
+    :func:`_minhash_docs`), exploded with ``inline``."""
+    keys = ", ".join(
+        f"named_struct('band', {b}, "
+        f"'key', hash(slice(sig, {b * rows + 1}, {rows})))"
+        for b in range(bands)
     )
+    return docs.select("doc", F.inline(F.expr(f"array({keys})")))
 
 
 def _band_candidates(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -900,8 +891,14 @@ def minhash_dedup_pairs(
 
 
 # Edge count up to which dedup_clusters solves components on the
-# driver: two id columns of 2M edges are ~32 MB of Arrow, the same
-# order as a broadcast-join side (autoBroadcastJoinThreshold spirit).
+# driver.  Measured with tools/cluster_cap_probe.py (local[4] on 4
+# vCPU, clique-shaped graphs, one call; wall s of the driver finish vs
+# the distributed loop, medians): 100k edges 4.2 vs 7.6, 1M 12.9 vs
+# 21.7, 2M 22.1-24.8 vs 29.2-32.4 (two runs each); the driver
+# finish's JVM peak RSS is below the loop's at every size (2M:
+# 4.2-6.0 vs 6.7-8.7 GB; its Python peak 0.5 GB).  There is no
+# crossover up to 2M edges; larger graphs were not measured, so the
+# cap is the largest size measured.
 _DRIVER_EDGES = 2_000_000
 
 
@@ -978,8 +975,10 @@ def dedup_clusters(
     Two paths, one contract.  The edges are pulled once with
     ``limit(_DRIVER_EDGES + 1).toArrow()``:
 
-    * at most ``_DRIVER_EDGES`` edges (2M, ~32 MB of Arrow — near-dup
-      graphs are tiny next to their corpus): the driver finish.  The
+    * at most ``_DRIVER_EDGES`` edges (2M, ~32 MB of Arrow; the
+      driver finish was measured faster and smaller than the loop up
+      to that size, see the constant — near-dup graphs are tiny next
+      to their corpus): the driver finish.  The
       components are solved in numpy (:func:`_min_labels`), and the
       labels of non-root nodes return as an Arrow LocalRelation that
       is broadcast-left-joined onto ``nodes`` as
@@ -987,7 +986,10 @@ def dedup_clusters(
       endpoints are both node ids (two semi-joins onto ``nodes``; one
       extra job when ``nodes`` broadcasts), and no job runs per
       round, however deep the graph.
-    * above the cap: distributed min-label propagation, below.
+    * above the cap: distributed min-label propagation, below, over
+      the same node-to-node edges.  Such a graph also pays for the
+      discarded pull (measured at 1M edges with the cap just below:
+      25.6 s against 21.7 s for the loop alone).
 
     Both paths: the label is the component's minimum id (strings in
     UTF-8 binary order); an edge with a NULL endpoint is ignored; a
@@ -1032,8 +1034,8 @@ def dedup_clusters(
     # partitioned + sorted on the join key (same fix as
     # pagerank — see operators/_iter_cache.py): rounds then only
     # exchange the (small) label state, never the edges.
-    sym = e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    sym = live.union(
+        live.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
     lab = nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("label"))
     # numeric ids get the cheap convergence probe: labels only ever

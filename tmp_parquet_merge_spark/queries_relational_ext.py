@@ -106,18 +106,6 @@ def q_percentiles(spark, sf_dir):
     )
 
 
-def _join_groups(left, right, keys, how="inner"):
-    """``left.join(right, keys, how)`` with NULL-safe key equality: a
-    NULL group key is a group like any other (``F.percentile`` keeps
-    it), while a plain equi-join drops it."""
-    renamed = {k: f"__r{k}" for k in keys}
-    on = [F.col(k).eqNullSafe(F.col(r)) for k, r in renamed.items()]
-    return (
-        left.join(right.withColumnsRenamed(renamed), on, how)
-        .drop(*renamed.values())
-    )
-
-
 def _exact_group_percentiles(
     df,
     group_col: str,
@@ -165,7 +153,12 @@ def _exact_group_percentiles(
     from pyspark.sql import Window
 
     v = F.col(val_col).cast("double")
-    rows = df.select(F.col(group_col).alias("__g"), v.alias("__v"))
+    # the group key rides in a struct: a struct is never NULL even
+    # when its field is, so the NULL group survives every equi-join
+    # below as a group like any other (F.percentile keeps it)
+    rows = df.select(
+        F.struct(F.col(group_col).alias("g")).alias("__g"), v.alias("__v")
+    )
     # NO spread_scan here (measured): a keyless round-robin spread
     # of the 600k-row value relation cost MORE than the single-task
     # map passes it parallelized (warm 2.8 -> 3.9 s — the repartition
@@ -192,7 +185,7 @@ def _exact_group_percentiles(
         .otherwise(F.lit(0))
         .cast("int")
     )
-    hb = _join_groups(rows, F.broadcast(stats), ["__g"]).select(
+    hb = rows.join(F.broadcast(stats), "__g").select(
         "__g", "__v", bucket.alias("__b")
     )
     hist = hb.groupBy("__g", "__b").agg(F.count(F.lit(1)).alias("__c"))
@@ -221,28 +214,24 @@ def _exact_group_percentiles(
     in_bucket = lambda r: (F.col("__before") <= r) & (  # noqa: E731
         r < F.col("__before") + F.col("__c")
     )
-    blo = (
-        _join_groups(tg, cum, ["__g"])
-        .filter(in_bucket(F.col("__lo")))
-        .select(
-            "__g",
-            "__p",
-            "__pos",
-            "__lo",
-            "__hi",
-            F.col("__b").alias("__b_lo"),
-            F.col("__before").alias("__off"),
-        )
+    blo = tg.join(cum, "__g").filter(in_bucket(F.col("__lo"))).select(
+        "__g",
+        "__p",
+        "__pos",
+        "__lo",
+        "__hi",
+        F.col("__b").alias("__b_lo"),
+        F.col("__before").alias("__off"),
     )
     bhi = (
-        _join_groups(tg, cum, ["__g"])
+        tg.join(cum, "__g")
         .filter(in_bucket(F.col("__hi")))
         .select("__g", "__p", F.col("__b").alias("__b_hi"))
     )
-    sel = _join_groups(blo, bhi, ["__g", "__p"])
+    sel = blo.join(bhi, ["__g", "__p"])
     cand = hb.join(
         F.broadcast(sel.withColumnRenamed("__g", "__sg")),
-        F.col("__g").eqNullSafe(F.col("__sg"))
+        (F.col("__g") == F.col("__sg"))
         & ((F.col("__b") == F.col("__b_lo")) | (F.col("__b") == F.col("__b_hi"))),
     )
     wr = Window.partitionBy("__g", "__p").orderBy("__v")
@@ -262,17 +251,16 @@ def _exact_group_percentiles(
         (F.col("__hi") - F.col("__pos")) * F.col("__vlo")
         + (F.col("__pos") - F.col("__lo")) * F.col("__vhi")
     )
-    out = _join_groups(
-        stats.select("__g"),
+    out = stats.select("__g").join(
         res.groupBy("__g").pivot("__p", [float(p) for p in pcts]).agg(
             F.first(val)
         ),
-        ["__g"],
+        "__g",
         "left",
     )
     if names is None:
         names = [f"p{int(p * 100)}" for p in pcts]
-    renames = [F.col("__g").alias(group_col)] + [
+    renames = [F.col("__g.g").alias(group_col)] + [
         # backticks: the pivot column is literally "0.5" — a bare
         # F.col would parse the dot as struct access
         F.col(f"`{float(p)}`").alias(name) for p, name in zip(pcts, names)
