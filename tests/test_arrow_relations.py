@@ -90,8 +90,15 @@ def test_merge_files_schema_matches_inferred(spark, tmp_path, case):
     parquet_io.write_parquet(v1, a)
     parquet_io.write_parquet(v2, b)
     merged = parquet_io.merge_files(spark, [a, b], out, **kwargs)
-    assert merged.schema == spark.read.parquet(out).schema
+    inferred = spark.read.parquet(out).schema
+    assert merged.schema == inferred
     assert merged.count() == 10
+    # the schema cache holds the written schema under the output's key,
+    # so a later read_parquet(output) runs no inference job
+    key = parquet_io._schema_key(spark, (out,))
+    assert parquet_io._SCHEMA_CACHE[key] == inferred
+    again, n = _jobs(spark, f"merge_read_back_{case}", lambda: parquet_io.read_parquet(spark, out))
+    assert n == 0 and again.schema == inferred
 
 
 @pytest.fixture

@@ -186,3 +186,24 @@ def test_lsh_query_job_pins(spark, sf_dir, query, max_jobs):
     )
     _, ran = _jobs(spark, f"pin-{query}-action", df.collect)
     assert built + ran <= max_jobs, (built, ran)
+
+
+@pytest.mark.parametrize("cores,probed", [(4, False), (32, True)])
+def test_spread_scan_probes_splits_only_above_four_cores(
+    spark, sf_dir, monkeypatch, cores, probed
+):
+    """With ``defaultParallelism <= 4`` one split already meets the
+    more-than-4x gate, so ``spread_scan`` decides without planning the
+    scan's RDD; above that it still probes, and fires on one split."""
+    from pyspark import SparkContext
+
+    scan = t(spark, sf_dir, "documents")
+    calls = []
+    rdd = type(scan).rdd
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: cores))
+    monkeypatch.setattr(
+        type(scan), "rdd", property(lambda df: calls.append(1) or rdd.__get__(df))
+    )
+    out = dedup.spread_scan(scan, "doc_id")
+    assert bool(calls) == probed
+    assert (out is scan) != probed

@@ -99,7 +99,10 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     count alone already proves enough splits (a split packs at most
     maxPartitionBytes/openCostInBytes files, so splits ≥ files/pack
     — any real many-file dataset), the no-op is decided from the
-    relation's file list without planning the RDD at all."""
+    relation's file list without planning the RDD at all; (c) with
+    ``defaultParallelism <= 4`` a scan of at least one file has at
+    least one split, which already meets the gate below, so the probe
+    (~0.03 s) is skipped there."""
     if getattr(df, "_tpms_spread_checked", False):
         return df
     spark = df.sparkSession
@@ -108,7 +111,8 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
         mpb = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
         oc = _parse_bytes(spark.conf.get("spark.sql.files.openCostInBytes"))
         pack = max(1, mpb // max(oc, 1))
-        if len(df.inputFiles()) * 4 >= target * pack:
+        n_files = len(df.inputFiles())
+        if n_files * 4 >= target * pack or (n_files and target <= 4):
             df._tpms_spread_checked = True
             return df
     except Exception:
@@ -117,8 +121,8 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
         have = df.rdd.getNumPartitions()
     except Exception:  # planning failure: leave the scan alone
         return df
-    # fire only on a SEVERE (>=4x) parallelism shortfall: a scan with
-    # most-of-target splits gains little from re-spreading but would
+    # fire only on a SEVERE parallelism shortfall, more than 4x: a scan
+    # with most-of-target splits gains little from re-spreading but would
     # pay a full data shuffle for it (measured at the 25x replica:
     # 25 splits re-spread to 32 cost q_sql_tpch_q1 a 15M-row exchange
     # for a 25->32 task gain — a 9x regression; with the 4x gate the

@@ -15,6 +15,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tmp_parquet_merge_spark.sources.parquet_io import read_parquet
+
 
 @dataclass(frozen=True)
 class Query:
@@ -36,9 +38,11 @@ def query(name: str, oracle: str | None = None):
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One testdata table; a repeated read of an unchanged file takes
+    its schema from ``parquet_io``'s schema cache (no inference job)."""
     if name == "events":
         return events_table(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # Fact tables worth a conditional parallelism floor when their scan is
@@ -138,7 +142,7 @@ def events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     µs truncation).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     ts_type = df.schema["ts"].dataType.simpleString()
     if ts_type in ("bigint", "long"):  # NANOS read as raw int64 ns
         conv = F.expr("timestamp_micros(ts DIV 1000)")

@@ -40,6 +40,15 @@ _BASE_CONF: dict[str, str] = {
     # on a real cluster this would scale with executors — AQE coalesces
     # down from a higher initial number there.
     "spark.sql.shuffle.partitions": "32",
+    # Generated-code cache (static conf, default 100 classes).  Distinct
+    # classes compiled over a run's first four passes (perfbench seed 1,
+    # 4 cores): llm_curation 132, parquet_merge 23, tpch_sql 351.
+    # Under LRU a cyclic working set larger than the cache misses on
+    # every lookup: at 100 a warm pass recompiled ~114 classes on
+    # llm_curation and ~320 on tpch_sql; at 2000 it compiles 0 (4 on
+    # tpch_sql, whose plans change a few classes per pass).  2000 is
+    # over 4x the largest working set.
+    "spark.sql.codegen.cache.maxEntries": "2000",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
     # managed-table scratch space (bucketed tables); keep the repo and
