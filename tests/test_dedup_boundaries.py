@@ -188,6 +188,19 @@ def test_lsh_query_job_pins(spark, sf_dir, query, max_jobs):
     assert built + ran <= max_jobs, (built, ran)
 
 
+def test_ann_lsh_job_pin(spark, sf_dir):
+    """q_ann_lsh at sf0.01, build + action, once the embeddings'
+    schema is cached as in every warm pass: the query pull, the
+    sketch scan that also re-ranks, and the ranking stage."""
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    REGISTRY["q_ann_lsh"].build(spark, sf)
+    df, built = _jobs(
+        spark, "pin-q_ann_lsh-build", lambda: REGISTRY["q_ann_lsh"].build(spark, sf)
+    )
+    _, ran = _jobs(spark, "pin-q_ann_lsh-action", df.collect)
+    assert built + ran <= 3, (built, ran)
+
+
 @pytest.mark.parametrize("cores,probed", [(4, False), (32, True)])
 def test_spread_scan_probes_splits_only_above_four_cores(
     spark, sf_dir, monkeypatch, cores, probed

@@ -254,6 +254,48 @@ def test_ann_lsh_recall_clustered(spark):
     assert len(approx & exact) / len(exact) >= 0.9
 
 
+def test_ann_topk_equals_brute_force_with_duplicate_ids_and_zero_vectors(spark):
+    """With ``overfetch`` at least the corpus size every vector is a
+    candidate, so ann_topk must return brute_force_topk's rows one for
+    one.  The corpus repeats ``vec_id`` 7 at two vectors near query 0
+    and holds zero vectors (one of them a query): each candidate row
+    carries its own similarity, so a repeated id is two rows with two
+    scores, never a cross product of both copies."""
+    import random
+
+    rnd = random.Random(11)
+    dim = 8
+    rows = [(i, [rnd.gauss(0, 1) for _ in range(dim)]) for i in range(60)]
+    q0 = rows[0][1]
+    rows[7] = (7, [x + 0.01 for x in q0])
+    rows.append((7, [x - 0.02 for x in q0]))
+    rows[40] = (40, [0.0] * dim)
+    rows[3] = (3, [0.0] * dim)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in rows],
+        "vec_id: long, embedding: array<float>",
+    )
+    q = df.filter(F.col("vec_id") < 5)
+
+    def ranked(out):
+        return sorted(tuple(r) for r in out.collect())
+
+    exact = ranked(similarity.brute_force_topk(df, q, k=10))
+    approx = ranked(
+        similarity.ann_topk(df, q, dim=dim, k=10, nbits=64, overfetch=len(rows))
+    )
+    assert approx == exact
+    assert sum(1 for r in exact if r[:2] == (0, 7)) == 2
+
+
+def test_hyperplanes_are_cached_and_read_only():
+    a = similarity._hyperplanes(64, 512)
+    assert a is similarity._hyperplanes(64, 512)
+    assert a.shape == (512, 64) and not a.flags.writeable
+    with pytest.raises(ValueError):
+        a[0, 0] = 1.0
+
+
 def test_ivf_topk_runs_and_ranks(spark, emb):
     out = similarity.ivf_topk(emb, emb.filter(F.col("vec_id") < 2), k=5).collect()
     assert {r.q_vec for r in out} == {0, 1}
@@ -680,6 +722,91 @@ def test_language_id_on_known_text(spark):
     )
     got = {r.doc_id: r.pred_lang for r in text.language_id(df, "text", "doc_id").collect()}
     assert got == {1: "en", 2: "de", 3: "fr", 4: "und"}
+
+
+# Edge texts for the language gate: NULL, empty, whitespace-only,
+# tab-led (the space-only trim leaves a leading space after
+# normalization), ties between languages and a ratio under the 2% cut.
+_GATE_TEXTS = [
+    None,
+    "",
+    "   ",
+    "\t \n",
+    "\tthe der le",
+    "der le",
+    "le la les",
+    "The  THE a\tof",
+    "zzz qqq xxx",
+    " \t der die das und the",
+    "the " + "word " * 59,
+]
+
+
+def _reference_norm(txt):
+    """normalize_text in Python: Spark's trim strips spaces only."""
+    import re
+
+    return None if txt is None else re.sub(r"[ \t\n\f\r]+", " ", txt.strip(" ").lower())
+
+
+def _reference_gate(txt):
+    """(pred_lang, best_ratio) of one text, spelled out in Python."""
+    if txt is None:
+        return "und", None
+    toks = _reference_norm(txt).split(" ")
+    best_lang, best = None, None
+    for lang, ws in text.STOPWORDS.items():
+        r = sum(t in ws for t in toks) / max(len(toks), 1)
+        if best is None or r > best:
+            best_lang, best = lang, r
+    return (best_lang if best >= 0.02 else "und"), best
+
+
+def test_language_gate_on_edge_texts(spark, tmp_path):
+    """q_lang_id, q_lang_id_eval and q_curation_pipeline share one
+    gate; on edge texts each agrees with the Python reference."""
+    from collections import Counter
+
+    from tmp_parquet_merge_spark.queries import REGISTRY
+
+    langs = ["en", "de", "fr"]
+    rows = [
+        (i, t, langs[i % 3], f"src{i % 2}", 0) for i, t in enumerate(_GATE_TEXTS)
+    ]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    ref = {i: _reference_gate(t) for i, t, *_ in rows}
+
+    got = {
+        r.doc_id: (r.pred_lang, r.stopword_ratio)
+        for r in REGISTRY["q_lang_id"].build(spark, str(tmp_path)).collect()
+    }
+    assert got.keys() == ref.keys()
+    for i, (pred, ratio) in ref.items():
+        assert got[i][0] == pred, (i, got[i], pred)
+        if ratio is None:
+            assert got[i][1] is None
+        else:
+            assert abs(got[i][1] - ratio) <= 1e-6, (i, got[i], ratio)
+
+    conf = {
+        (r.lang, r.pred_lang): r.n
+        for r in REGISTRY["q_lang_id_eval"].build(spark, str(tmp_path)).collect()
+    }
+    assert conf == dict(Counter((lang, ref[i][0]) for i, _t, lang, *_ in rows))
+
+    # first-failing-gate attribution: a keeper (lowest doc_id of its
+    # normalized text) whose language is not en is counted under "lang"
+    keeper = {}
+    for i, t, *_ in rows:
+        keeper.setdefault(_reference_norm(t), i)
+    want = Counter(
+        src for i, t, _l, src, _n in rows
+        if keeper[_reference_norm(t)] == i and ref[i][0] != "en"
+    )
+    out = REGISTRY["q_curation_pipeline"].build(spark, str(tmp_path)).collect()
+    assert {r.source: r.n_docs for r in out if r.decision == "lang"} == dict(want)
 
 
 def test_quality_score_flags_degenerate_docs(spark):

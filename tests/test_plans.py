@@ -148,6 +148,28 @@ def test_similarity_prunes_before_shuffle(spark, sf_dir):
     assert executes_before(df, "WindowGroupLimit", "Exchange")
 
 
+def test_ann_lsh_reads_the_corpus_once_in_one_python_stage(spark, sf_dir):
+    """The exact re-rank runs inside the sketch scan: one embeddings
+    scan, one MapInPandas, no unit/dot pandas UDF, one exchange that
+    both ranking windows share."""
+    df = build("q_ann_lsh", spark, sf_dir)
+    tree = plan_tree(df)
+    assert tree.count("Scan parquet") == 1
+    assert tree.count("MapInPandas") == 1
+    assert "ArrowEvalPython" not in tree
+    assert tree.count("Exchange") == 1
+    assert executes_before(df, "WindowGroupLimit", "Exchange")
+
+
+def test_lang_id_normalizes_each_document_once(spark, sf_dir):
+    """The language gate stages the normalized text and the ratios as
+    columns: one regexp_replace in the whole plan, not one per copy of
+    each ratio in the argmax."""
+    assert formatted_plan(build("q_lang_id", spark, sf_dir)).count(
+        "regexp_replace"
+    ) == 1
+
+
 def test_whole_stage_codegen_on_hot_paths(spark, sf_dir):
     # AQE wraps the plan in AdaptiveSparkPlan and reports 0 codegen
     # subtrees until execution — disable it for this static probe

@@ -242,18 +242,16 @@ def test_second_run_of_the_llm_queries_compiles_nothing(spark, sf_dir):
     """The seven queries need ~117 generated classes at sf0.001; with
     Spark's default 100-entry cache the second run recompiles 64 of
     them.  AQE numbers the whole-stage codegen stages of concurrent
-    query stages in completion order, and the stage id is part of the
-    class name, so a run can miss on a renamed copy of a cached class.
-    The window drops the id from class names so that race cannot
-    blur what is tested here: the cache's capacity."""
+    query stages in completion order, and the engine's session drops
+    that id from class names, so a renamed copy of a cached class is
+    a hit too."""
     metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
 
     def run():
         for name in LLM_CURATION_QUERIES:
             REGISTRY[name].build(spark, sf_dir).collect()
 
-    with session_conf(spark, **{"spark.sql.codegen.useIdInClassName": "false"}):
-        run()
-        before = metric.getCount()
-        run()
-        assert metric.getCount() - before == 0
+    run()
+    before = metric.getCount()
+    run()
+    assert metric.getCount() - before == 0

@@ -20,6 +20,7 @@ folds, deterministic order (matters for oracle parity), no Python.
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -499,10 +500,12 @@ def embedding_dedup_pairs_lsh(
 # --- LSH (random hyperplane / SRP) ------------------------------------------
 
 
-def _hyperplanes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random unit hyperplanes (Box-Muller over a
-    splitmix-ish integer stream — plain Python, evaluated once on the
-    driver and inlined as literals into the plan)."""
+@functools.lru_cache(maxsize=32)
+def _hyperplanes(dim: int, nbits: int, seed: int = 42) -> np.ndarray:
+    """Deterministic pseudo-random hyperplanes, ``(nbits, dim)`` float64
+    (Box-Muller over a splitmix-ish integer stream).  The plain-Python
+    loop costs tens of ms at 512×64, so the result is cached on its
+    arguments and returned read-only: every caller shares one copy."""
 
     def mix(x: int) -> int:
         x = (x ^ (x >> 30)) * 0xBF58476D1CE4E5B9 % (1 << 64)
@@ -518,16 +521,18 @@ def _hyperplanes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
             r = math.sqrt(-2 * math.log(u1))
             v.extend([r * math.cos(2 * math.pi * u2), r * math.sin(2 * math.pi * u2)])
         planes.append(v[:dim])
-    return planes
+    P = np.array(planes, dtype=np.float64).reshape(nbits, dim)
+    P.setflags(write=False)
+    return P
 
 
-def srp_band_keys_udf(planes: list[list[float]], bands: int):
+def srp_band_keys_udf(planes: np.ndarray, bands: int):
     """Arrow-vectorized per-band SRP bucket keys: each band's
     ``rows = nbits/bands`` sign bits packed little-endian into one
     long (one batch matmul + one packing matmul).  Integer keys make
     Hamming-1 multi-probe pure XOR arithmetic downstream — the probe
     side never carries or re-hashes bit arrays."""
-    P = np.array(planes, dtype=np.float64).T  # (dim, nbits)
+    P = planes.T  # (dim, nbits)
     nbits = P.shape[1]
     rows = nbits // bands
     if rows > 62:
@@ -647,14 +652,19 @@ def ann_topk(
     ``nbits/8`` bytes/vector — 4× smaller than the raw 64-float vector
     at the 512-bit default — so the candidate scan touches a fraction
     of the bytes a brute-force pass reads) and keeps the ``overfetch``
-    closest ids per query, pruned per Arrow batch so only
-    O(batches × |Q| × overfetch) int triples ever leave the scan.
-    Stage 2 re-ranks ONLY the surviving candidates with the exact
-    rounded cosine (the :func:`pq_topk` re-rank pattern), so whenever
-    the candidate set covers the true top-k the output is
-    row-identical to :func:`brute_force_topk` — pinned on the bundled
-    corpora in tests/test_llm_ops.py, which is what lets q_ann_lsh
-    carry the exact-twin SQL oracle.
+    closest ids per query, pruned per Arrow batch.  The same batch
+    also scores those survivors with the exact rounded cosine, from
+    the vectors it already holds and the broadcast unit queries, so
+    only O(batches × |Q| × overfetch) ``(q_vec, n_vec, hamm, sim)``
+    rows leave the scan: the corpus is read and normalized once, in
+    one Python stage, and no vector joins back by id.  Two windows on
+    the same ``q_vec`` partitioning then keep the global ``overfetch``
+    closest sketches and, among them, the top-k by ``(sim desc,
+    n_vec)``.  Whenever the candidate set covers the true top-k the
+    output is row-identical to :func:`brute_force_topk`, duplicated
+    ids included — pinned on the bundled corpora in
+    tests/test_llm_ops.py, which is what lets q_ann_lsh carry the
+    exact-twin SQL oracle.
 
     Recall economics, stated honestly: the Hamming rank concentrates
     around the true angle with std ≈ π/(2·√nbits), so on clustered
@@ -674,67 +684,58 @@ def ann_topk(
     q_ids = np.array(qpdf[id_col], dtype=np.int64)
     Q = np.array(qpdf[vec_col].tolist(), dtype=np.float64)
     Qn = Q / _safe_norm(Q)
-    P = np.array(_hyperplanes(dim, nbits), dtype=np.float64)  # (nbits, dim)
+    P = _hyperplanes(dim, nbits)  # (nbits, dim)
     Qb = (Qn @ P.T) > 0  # (|Q|, nbits)
     sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, Qb.astype(np.float64), P))
+    bq = sc.broadcast((q_ids, Qb.astype(np.float64), P, Qn))
 
     def hamming_candidates(batches):
-        q_ids, Qbf, P = bq.value
+        q_ids, Qbf, P, Qn = bq.value
         nb = P.shape[0]
         for pdf in batches:
             ids = np.array(pdf[id_col], dtype=np.int64)
             X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             n = np.linalg.norm(X, axis=1, keepdims=True)
             n[n == 0.0] = 1.0
-            Xbf = ((X / n) @ P.T > 0).astype(np.float64)
+            Xn = X / n
+            Xbf = (Xn @ P.T > 0).astype(np.float64)
             # Hamming distance via two matmuls (integer-exact in f64):
             # agreements = ones·ones + zeros·zeros; D = nbits - agree
             D = nb - Xbf @ Qbf.T - (1.0 - Xbf) @ (1.0 - Qbf.T)
-            out_q, out_n, out_d = [], [], []
+            qi, ni = [], []
             for j, qid in enumerate(q_ids):
                 col = D[:, j]
                 ci = np.nonzero(ids != qid)[0]
                 # exact (hamming asc, id asc) order, batch-local top-C
                 order = np.lexsort((ids[ci], col[ci]))[: int(overfetch)]
-                pick = ci[order]
-                out_q.extend([qid] * len(pick))
-                out_n.extend(ids[pick])
-                out_d.extend(col[pick].astype(np.int64))
-            yield pd.DataFrame({"q_vec": out_q, "n_vec": out_n, "hamm": out_d})
+                qi.append(np.full(len(order), j, dtype=np.int64))
+                ni.append(ci[order])
+            qi, ni = np.concatenate(qi), np.concatenate(ni)
+            # exact rounded cosine of the surviving candidates, from the
+            # rows this batch already holds: one einsum over (query,
+            # candidate) row pairs, the arithmetic of dot_udf
+            sim = np.round(np.einsum("ij,ij->i", Qn[qi], Xn[ni]), round_to)
+            yield pd.DataFrame(
+                {
+                    "q_vec": q_ids[qi],
+                    "n_vec": ids[ni],
+                    "hamm": D[ni, qi].astype(np.int64),
+                    "sim": sim,
+                }
+            )
 
     cand = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        hamming_candidates, schema="q_vec long, n_vec long, hamm long"
+        hamming_candidates,
+        schema="q_vec long, n_vec long, hamm long, sim double",
     )
     from tmp_parquet_merge_spark.operators.relational import grouped_top_k
 
-    # global over-fetch: merge the tiny per-batch prunes, then join the
-    # candidates' embeddings back BY ID for the exact verify — only
-    # overfetch × |Q| vectors (not the corpus) ride this join
+    # global over-fetch, then the exact re-rank: both windows partition
+    # on q_vec, so the tiny per-batch prunes shuffle once
     cand = grouped_top_k(
         cand, ["q_vec"], [F.col("hamm").asc(), F.col("n_vec")], int(overfetch)
-    ).select("q_vec", "n_vec")
-    # Plain Python ints/floats, NOT numpy scalars: Spark's non-Arrow
-    # createDataFrame fallback rejects numpy.float64 inside array<double>
-    # (PySparkTypeError FIELD_DATA_TYPE_UNACCEPTABLE — crashed the
-    # correctness driver), and whether Arrow engages is config-dependent.
-    qe = corpus.sparkSession.createDataFrame(
-        pd.DataFrame({"q_vec": q_ids.tolist(), "q_emb": Qn.tolist()}),
-        schema="q_vec long, q_emb array<double>",
-    )
-    ne = corpus.select(
-        F.col(id_col).alias("n_vec"), unit_udf()(F.col(vec_col)).alias("n_emb")
-    )
-    sims = (
-        cand.join(F.broadcast(qe), "q_vec")
-        .join(ne, "n_vec")
-        .select(
-            "q_vec",
-            "n_vec",
-            dot_udf(round_to)(F.col("q_emb"), F.col("n_emb")).alias("sim"),
-        )
-    )
-    return grouped_top_k(sims, ["q_vec"], [F.col("sim").desc(), F.col("n_vec")], k)
+    ).select("q_vec", "n_vec", "sim")
+    return grouped_top_k(cand, ["q_vec"], [F.col("sim").desc(), F.col("n_vec")], k)
 
 
 def kmeans_fit(

@@ -86,19 +86,26 @@ def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
     (whole-stage codegen, JVM regex) instead of the obvious
     ``filter(words, isin)`` array lambda: higher-order lambdas are
     interpreted PER ELEMENT and get re-inlined into every consumer by
-    CollapseProject — inside lang_pred_exprs' argmax when-chain that
-    made language-ID ~4x slower for identical counts.  The padded
-    " word(?= )" alternation counts exactly the tokens the lambda
-    counted (duplicates included, same as the DuckDB oracle's
-    list_filter); the lookahead keeps consecutive stopwords from
-    swallowing each other's delimiter.  Each word is regex-escaped:
-    today's en/de/fr lists are plain alphabetic so the
+    CollapseProject, which made language-ID ~4x slower for identical
+    counts.  The padded " word(?= )" alternation counts exactly the
+    tokens the lambda counted (duplicates included, same as the DuckDB
+    oracle's list_filter); the lookahead keeps consecutive stopwords
+    from swallowing each other's delimiter.  Each word is
+    regex-escaped: today's en/de/fr lists are plain alphabetic so the
     escaped pattern is byte-identical, but a future list entry with a
     metacharacter ("c.", "+") must stay a token-equality match, not
-    become a regex."""
+    become a regex.
+
+    The expression normalizes ``text`` itself; a consumer that needs
+    several ratios of one document stages the normalized text once
+    and calls :func:`_ratio_of_normalized` (see :func:`lang_pred_exprs`)."""
+    return _ratio_of_normalized(normalize_text(text), lang)
+
+
+def _ratio_of_normalized(norm: Column, lang: str) -> Column:
+    """:func:`stopword_ratio` of text that is already normalized."""
     import re as _re
 
-    norm = normalize_text(text)
     pat = " (" + "|".join(_re.escape(w) for w in STOPWORDS[lang]) + ")(?= )"
     hits = F.regexp_count(
         F.concat(F.lit(" "), norm, F.lit(" ")), F.lit(pat)
@@ -141,14 +148,43 @@ def text_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def lang_pred_exprs(text_col: Column | str) -> tuple[Column, Column]:
-    """(pred_lang, best_ratio) column expressions — argmax of
-    per-language stopword hit ratios, 'und' below the 2% cut.  The
-    single source of the language-gate semantics, shared by
-    language_id and every fused pipeline that embeds the gate."""
-    ratios = {lang: stopword_ratio(text_col, lang) for lang in STOPWORDS}
+# Staged columns of the language gate; lang_pred_exprs' callers
+# select them away again.
+_LANG_NORM = "__lang_norm"
+_LANG_RATIO = {lang: f"__lang_r_{lang}" for lang in STOPWORDS}
+
+
+def lang_pred_exprs(
+    df: DataFrame, text_col: Column | str
+) -> tuple[DataFrame, Column, Column]:
+    """The language gate: ``(staged, pred_lang, best_ratio)``, where
+    ``pred_lang`` is the argmax of the per-language stopword hit
+    ratios ('und' below the 2% cut) and both columns are expressions
+    over ``staged``, which is ``df`` plus internal columns the caller's
+    projection drops.  The single source of the language-gate
+    semantics, shared by language_id and every fused pipeline that
+    embeds the gate.
+
+    Each row's text is normalized once and each ratio computed once:
+    ``staged`` holds the normalized text, then the three ratios, as
+    columns of their own projections.  Catalyst's CollapseProject does
+    not inline a non-cheap expression (a regex) that its consumer
+    references more than once, so the argmax's comparisons read the
+    staged values.  Spelled as one expression instead, the when-chain
+    copied every ratio, and with it ``normalize_text``, into each
+    later comparison: ``q_lang_id``'s plan spelled ``regexp_replace``
+    54 times."""
+    staged = (
+        df.withColumn(_LANG_NORM, normalize_text(text_col))
+        .withColumns(
+            {c: _ratio_of_normalized(F.col(_LANG_NORM), lang)
+             for lang, c in _LANG_RATIO.items()}
+        )
+        .drop(_LANG_NORM)
+    )
     best_lang, best_ratio = None, None
-    for lang, r in ratios.items():
+    for lang, c in _LANG_RATIO.items():
+        r = F.col(c)
         if best_lang is None:
             best_lang, best_ratio = F.lit(lang), r
         else:
@@ -156,14 +192,14 @@ def lang_pred_exprs(text_col: Column | str) -> tuple[Column, Column]:
             best_lang = F.when(swap, F.lit(lang)).otherwise(best_lang)
             best_ratio = F.when(swap, r).otherwise(best_ratio)
     pred = F.when(best_ratio >= 0.02, best_lang).otherwise(F.lit("und"))
-    return pred, best_ratio
+    return staged, pred, best_ratio
 
 
 def language_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Heuristic language ID: argmax of per-language stopword hit
     ratios; 'und' (undetermined) when no language clears 2%."""
-    pred, best_ratio = lang_pred_exprs(text_col)
-    return df.select(
+    staged, pred, best_ratio = lang_pred_exprs(df, text_col)
+    return staged.select(
         F.col(id_col),
         pred.alias("pred_lang"),
         F.round(best_ratio, 6).alias("stopword_ratio"),

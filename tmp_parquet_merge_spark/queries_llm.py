@@ -1424,15 +1424,14 @@ def q_sample_stratified(spark, sf_dir):
 def q_lang_id_eval(spark, sf_dir):
     """Confusion matrix of the heuristic language-ID against the
     corpus's ground-truth ``lang`` column — the eval loop every
-    classifier-driven curation step needs.  The classifier is a pure
-    column expression (text.lang_pred_exprs), so prediction and truth
-    ride ONE corpus scan into one hash-agg — the former doc_id
+    classifier-driven curation step needs.  The classifier is a few
+    projections over the scan (text.lang_pred_exprs), so prediction
+    and truth ride ONE corpus scan into one hash-agg — the former doc_id
     self-join (a second scan + two shuffles) measured 2x the cost for
     identical output."""
-    pred, _ = text.lang_pred_exprs("text")
+    docs, pred, _ = text.lang_pred_exprs(t(spark, sf_dir, "documents"), "text")
     return (
-        t(spark, sf_dir, "documents")
-        .select("lang", pred.alias("pred_lang"))
+        docs.select("lang", pred.alias("pred_lang"))
         .groupBy("lang", "pred_lang")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -2781,9 +2780,8 @@ def q_curation_pipeline(spark, sf_dir):
     running the three component queries separately."""
     from pyspark.sql import Window
 
-    docs = t(spark, sf_dir, "documents")
+    docs, pred, _ = text.lang_pred_exprs(t(spark, sf_dir, "documents"), "text")
     ws = dedup.words("text")
-    pred, _ = text.lang_pred_exprs("text")
     s_len, s_awl, s_stop, s_div = text.quality_subscore_exprs("text")
     quality = (s_len + s_awl + s_stop + s_div) / 4.0
     m = docs.select(

@@ -49,6 +49,12 @@ _BASE_CONF: dict[str, str] = {
     # tpch_sql, whose plans change a few classes per pass).  2000 is
     # over 4x the largest working set.
     "spark.sql.codegen.cache.maxEntries": "2000",
+    # AQE numbers concurrent query stages in completion order, and the
+    # whole-stage codegen stage id is part of the generated class name,
+    # so a warm run missed the cache on renamed copies of cached
+    # classes (q_tfidf recompiled 4, 4 and 2 classes in its first three
+    # warm passes).  Without the id, equal code is one cache entry.
+    "spark.sql.codegen.useIdInClassName": "false",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
     # managed-table scratch space (bucketed tables); keep the repo and
